@@ -668,33 +668,40 @@ def _hashed_sql_parts(
 
     norm = NORM_SQL.format(c=text)
     bucket = md5_int_sql("'f:' || tok")
+    # MATERIALIZED is load-bearing on every CTE the GD loop re-reads:
+    # DuckDB inlines a plain CTE at each reference, and w{i}/b{i} read
+    # w{i-1}/b{i-1} both directly and through c/zp/g/gb, so each copy
+    # re-expanded feats -> toks (the char-gram UNNEST) and the plan grew
+    # geometrically with iters (langid_scores_sql on the 100-doc
+    # multilingual fixture: iters=2 OOM at 1 GB, iters=3 OOM at 12.5 GB;
+    # materialized, iters=3 runs in 0.4 s, ~230 MB peak RSS)
     if grams is not None:
         # overlapping char n-grams of the normalized text; docs shorter
         # than n chars (or NULL) produce no rows, exactly like Spark's
         # empty-sequence explode
-        toks_sql = f"""toks AS (
+        toks_sql = f"""toks AS MATERIALIZED (
   SELECT did, substr(t, i, {grams}) AS tok
   FROM (SELECT {id_col} AS did, {norm} AS t FROM {table}),
        UNNEST(generate_series(1, length(t) - {grams - 1})) AS u(i)
 )"""
     else:
-        toks_sql = f"""toks AS (
+        toks_sql = f"""toks AS MATERIALIZED (
   SELECT {id_col} AS did, t.tok FROM {table},
   unnest(str_split({norm}, ' ')) AS t(tok) WHERE t.tok != ''
 )"""
     return [
-        f"base AS (SELECT {id_col} AS did, CAST(({label_sql}) AS INT) AS y FROM {table})",
+        f"base AS MATERIALIZED (SELECT {id_col} AS did, CAST(({label_sql}) AS INT) AS y FROM {table})",
         toks_sql,
-        "lens AS (SELECT did, count(*) AS len FROM toks GROUP BY 1)",
-        f"""bcnt AS (
+        "lens AS MATERIALIZED (SELECT did, count(*) AS len FROM toks GROUP BY 1)",
+        f"""bcnt AS MATERIALIZED (
   SELECT did, {bucket} % {n_features} AS bucket, count(*) AS cnt
   FROM toks GROUP BY 1, 2
 )""",
-        """feats AS (
+        """feats AS MATERIALIZED (
   SELECT b.did, b.bucket, CAST(b.cnt AS DOUBLE) / l.len AS tf
   FROM bcnt b JOIN lens l USING (did)
 )""",
-        "w0 AS (SELECT DISTINCT bucket, 0.0 AS w FROM feats)",
+        "w0 AS MATERIALIZED (SELECT DISTINCT bucket, 0.0 AS w FROM feats)",
         "b0 AS (SELECT 0.0 AS b)",
     ]
 
@@ -708,34 +715,36 @@ def _hashed_sql_iters(iters: int, lr: float) -> list[str]:
             f"ELSE -floor(-({expr}) + 0.5) END AS BIGINT)"
         )
 
+    # every round is MATERIALIZED for the reason in _hashed_sql_parts:
+    # inlined, each round re-expands all earlier rounds
     parts = []
     for i in range(1, int(iters) + 1):
         t = f"b{i-1}.b + CAST(coalesce(c.s, 0) AS DOUBLE) / 1000000000.0"
         p = f"floor((1.0 / (1.0 + exp(-({t})))) * 1000000.0 + 0.5) / 1000000.0"
         parts.append(
-            f"""c{i} AS (
+            f"""c{i} AS MATERIALIZED (
   SELECT f.did, sum({qint('w.w * f.tf * 1000000000.0')}) AS s
   FROM feats f JOIN w{i-1} w USING (bucket) GROUP BY 1
 )"""
         )
         parts.append(
-            f"""zp{i} AS (
+            f"""zp{i} AS MATERIALIZED (
   SELECT l.did, l.y, {p} AS p
   FROM base l LEFT JOIN c{i} c USING (did), b{i-1}
 )"""
         )
         parts.append(
-            f"""g{i} AS (
+            f"""g{i} AS MATERIALIZED (
   SELECT f.bucket, sum({qint('(zp.p - zp.y) * f.tf * 1000000000.0')}) AS g
   FROM feats f JOIN zp{i} zp USING (did) GROUP BY 1
 )"""
         )
         parts.append(
-            f"gb{i} AS (SELECT count(*) AS n, "
+            f"gb{i} AS MATERIALIZED (SELECT count(*) AS n, "
             f"sum({qint('(p - y) * 1000000000.0')}) AS sb FROM zp{i})"
         )
         parts.append(
-            f"b{i} AS (SELECT "
+            f"b{i} AS MATERIALIZED (SELECT "
             + _q_sql(
                 f"b{i-1}.b - {lr_lit} * (CAST(sb AS DOUBLE) / 1000000000.0 / n)",
                 "1000000000.0",
@@ -743,7 +752,7 @@ def _hashed_sql_iters(iters: int, lr: float) -> list[str]:
             + f" AS b FROM b{i-1}, gb{i})"
         )
         parts.append(
-            f"w{i} AS (SELECT w.bucket, "
+            f"w{i} AS MATERIALIZED (SELECT w.bucket, "
             + _q_sql(
                 f"w.w - {lr_lit} * (CAST(g.g AS DOUBLE) / 1000000000.0 / n)",
                 "1000000000.0",
