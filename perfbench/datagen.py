@@ -5,7 +5,7 @@ do not depend on the seed, only values do.
   (TESTDATA.md column names and parquet types) at about its sf0.01
   row counts: 1,500 customers, 15,000 orders, 60,000 line items,
   10,000 events over 30 days, 500 documents (25 of them near-copies).
-* :func:`sensor_batch` — one micro-batch of JSON sensor messages.
+* :func:`sensor_batch` — one micro-batch of JSON sensor messages, in bursts.
 * :func:`history_lists` — per-metric Redis lists of ``[ts, value]``
   JSON pairs, newest first, as the reference's history keys hold them.
 """
@@ -106,22 +106,30 @@ def write_tables(out_dir: str, seed: int) -> dict[str, int]:
 
 
 def sensor_batch(seed: int, index: int, *, sensors: int, metrics: int, start_s: int,
-                 span_s: int, per_sensor: int) -> list[dict]:
+                 span_s: int, per_sensor: int, burst: int) -> list[dict]:
     """``per_sensor`` messages for each sensor over ``[start_s, start_s +
     span_s)`` in event-time order, each carrying every metric; integer
-    second timestamps, strictly increasing per sensor."""
+    second timestamps, strictly increasing per sensor.
+
+    A sensor reports in bursts of ``burst`` messages 5-29 s apart (a
+    burst lasts 15-87 s when ``burst`` is 4), the bursts spread evenly
+    over the span.  So the 60 s anchored downsample drops most of a burst
+    and now and then keeps a second message of it."""
     rng = np.random.default_rng([seed, 2, index])
-    step = span_s // per_sensor
+    n_bursts = per_sensor // burst
+    step = span_s // n_bursts
     msgs = []
-    for k in range(per_sensor):
+    for k in range(n_bursts):
         for s in range(sensors):
             ts = start_s + k * step + int(rng.integers(0, step // 2))
-            vals = np.round(rng.normal(50.0, 15.0, metrics), 2)
-            msgs.append({
-                "ts": ts,
-                "source": f"sensor{s}",
-                "value": {f"m{j}": float(v) for j, v in enumerate(vals)},
-            })
+            for _ in range(burst):
+                vals = np.round(rng.normal(50.0, 15.0, metrics), 2)
+                msgs.append({
+                    "ts": ts,
+                    "source": f"sensor{s}",
+                    "value": {f"m{j}": float(v) for j, v in enumerate(vals)},
+                })
+                ts += int(rng.integers(5, 30))
     return msgs
 
 

@@ -7,6 +7,8 @@
   Only the traced mode creates one; untraced runs carry no wrappers.
 * :func:`spark_op_metrics` — per-operation Spark engine counters read
   from the local status REST API after the timed phase.
+* :func:`plan_python_metrics` — Python-worker time and bytes of an
+  executed plan, for the streaming micro-batches the REST API misses.
 """
 
 from __future__ import annotations
@@ -284,6 +286,30 @@ def spark_op_metrics(spark, windows: list[tuple[float, float]]) -> dict[str, flo
         "session.python_worker_ms_per_op": tot["py_ms"] / n,
         "session.python_bytes_per_op": tot["py_bytes"] / n,
     }
+
+
+def plan_python_metrics(plan) -> tuple[float, float]:
+    """(ms running Python workers, bytes sent to and returned from them)
+    summed over the nodes of an executed JVM ``SparkPlan``, read through
+    py4j.  A streaming query's stateful Python node reports here, on the
+    micro-batch's ``IncrementalExecution``: the ``foreachBatch`` jobs run
+    it as an RDD, so the ``/sql`` REST API shows no metrics for it."""
+    ms, size, found = 0.0, 0.0, False
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        metrics = node.metrics()
+        if metrics.contains("pythonTotalTime"):
+            found = True
+            ms += metrics.apply("pythonTotalTime").value()
+            for k in ("pythonDataSent", "pythonDataReceived"):
+                if metrics.contains(k):
+                    size += metrics.apply(k).value()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    if not found:
+        raise RuntimeError("no Python node in the executed plan")
+    return ms, size
 
 
 def median(xs) -> float:

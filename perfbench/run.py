@@ -2,10 +2,12 @@
 --seconds <s> --trace <0|1>`` from the root of a checkout.
 
 It runs the checkout's own ``trend_o_meter_spark`` at its defaults in
-one local Spark session, times the whole rounds of the workload's
-operations that fill ``--seconds`` on the reference host, checks the outputs, and
-prints one JSON object as the last line of standard output.  See
-README.md next to this file.
+one local Spark session, times a fixed number of whole rounds of the
+workload's operations (``rounds_per_10s`` per 10 s of ``--seconds``),
+checks the outputs, and prints one JSON object as the last line of
+standard output.  An operation that raises ends the run with a non-zero
+exit and no result, so ``failed`` is always 0.  See README.md next to
+this file.
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ from perfbench.harness import (  # noqa: E402
     spark_op_metrics,
 )
 
-ROUND_S = 10.0
 # Environment that would move the program off its own defaults.
 DROPPED_ENV = (
     "SPARK_GRAFT_SHUFFLE",
@@ -73,6 +74,20 @@ def check_origin(spark) -> None:
         raise RuntimeError(f"package imported from driver={here} worker={worker}, not {want}")
 
 
+def check_settings(spark, settings: dict[str, str]) -> None:
+    """The session runs at the host settings and the program's own defaults."""
+    from trend_o_meter_spark.session import RUNTIME_CONF
+
+    want = {
+        "spark.master": f"local[{settings['SPARK_GRAFT_CPUS']}]",
+        "spark.driver.memory": settings["SPARK_GRAFT_DRIVER_MEM"],
+        "spark.sql.shuffle.partitions": RUNTIME_CONF["spark.sql.shuffle.partitions"],
+    }
+    got = {k: spark.conf.get(k, None) for k in want}
+    if got != want:
+        raise RuntimeError(f"session conf {got} differs from {want}")
+
+
 def install_tracing(tracer: Tracer) -> None:
     """Spans around the program's public functions, from outside them."""
     from trend_o_meter_spark import catalog, workload
@@ -88,7 +103,7 @@ def install_tracing(tracer: Tracer) -> None:
     tracer.wrap(redis_source, "read_history_list", "transports.lrange")
     tracer.wrap(redis_source, "history_df", "transports.history_df")
     tracer.wrap(pipeline, "seed_history", "pipeline.seed")
-    for m in ("append", "read", "compact", "seed"):
+    for m in ("append", "read", "seed"):
         tracer.wrap(PartialStateTable, m, f"statestore.{m}")
 
 
@@ -126,7 +141,10 @@ def layer_metrics(wl, tracer: Tracer, spark, windows, n_ops: int, lat_ms, items_
         out[f"query.{name}.plan_ms"] = 0.0
         out[f"query.{name}.exec_ms"] = 0.0
     out.update(spark_op_metrics(spark, windows))
-    out.update(wl.layer_metrics(n_ops))
+    layer = wl.layer_metrics(n_ops)
+    for k in ("session.python_worker_ms_per_op", "session.python_bytes_per_op"):
+        out[k] += layer.pop(k, 0.0)
+    out.update(layer)
     return out
 
 
@@ -161,16 +179,19 @@ def main() -> int:
     if args.workload not in WORKLOADS:
         print(f"unknown workload {args.workload!r}; one of {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
-    from trend_o_meter_spark.session import get_spark
-
     tag = f"{args.workload}-seed{args.seed}-trace{args.trace}"
     work = ROOT / ".perfbench_work" / f"{tag}-{os.getpid()}"
     out_dir = ROOT / ".perfbench_out"
     settings = host_settings(work)
+    # before the package is imported: session.py reads its environment
+    # into BUILD_CONF / RUNTIME_CONF at import time
     for k in DROPPED_ENV:
         os.environ.pop(k, None)
     os.environ.update(settings)
     time.tzset()
+    if "trend_o_meter_spark" in sys.modules:
+        raise RuntimeError("trend_o_meter_spark was imported before the host settings were made")
+    from trend_o_meter_spark.session import get_spark
     for d in ("scratch", "tmp"):
         (work / d).mkdir(parents=True, exist_ok=True)
     print("settings: " + json.dumps(settings), flush=True)
@@ -180,6 +201,7 @@ def main() -> int:
     try:
         spark = get_spark("perfbench")
         check_origin(spark)
+        check_settings(spark, settings)
         print(f"phase: session {since_process_start():.2f} s", flush=True)
         tracer = Tracer() if args.trace else None
         if tracer is not None:
@@ -193,8 +215,8 @@ def main() -> int:
         setup_s = since_process_start()
         cpu0, t0 = tree.cpu_seconds(), time.perf_counter()
         # a fixed amount of work, so every run stops at the same warm-up
-        # stage: one round takes 10-16 s on the reference host (README)
-        for n_round in range(max(1, round(args.seconds / ROUND_S))):
+        # stage: ``rounds_per_10s`` whole rounds per 10 s asked for (README)
+        for n_round in range(max(1, round(args.seconds * wl.rounds_per_10s / 10))):
             for op in wl.round(n_round):
                 if tracer is not None:
                     tracer.start_op(len(lat_ms))

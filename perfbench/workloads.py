@@ -17,10 +17,14 @@ import random
 from pathlib import Path
 
 from perfbench import datagen, reference
-from perfbench.harness import Tracer, median, since_process_start
+from perfbench.harness import Tracer, median, plan_python_metrics, since_process_start
 
 
 class Workload:
+    # whole rounds timed per 10 s of ``--seconds``: the median over one
+    # round of a workload with few, short operations does not repeat
+    rounds_per_10s = 1
+
     def __init__(self, spark, seed: int, work: Path, tracer: Tracer | None):
         self.spark, self.seed, self.work, self.tracer = spark, seed, work, tracer
 
@@ -59,7 +63,7 @@ class LiveTrend(Workload):
     -> ``render_frame``.  The start-up bootstrap and the first, cold
     micro-batch are set-up; each timed operation is one micro-batch."""
 
-    SENSORS, METRICS, PER_SENSOR = 8, 5, 144
+    SENSORS, METRICS, PER_SENSOR, BURST = 8, 5, 144, 4
     SPAN_S = 3 * 86_400  # event time per batch
     START_S = 1_700_000_000  # the history ends and the live stream begins here
     HISTORY_METRICS = ("sensor0.m0", "sensor0.m1")
@@ -77,6 +81,7 @@ class LiveTrend(Workload):
         self.in_dir.mkdir(parents=True)
         self.batches: list[list[dict]] = []
         self.last: tuple | None = None
+        self.python: list[tuple[float, float]] = []  # per micro-batch, traced runs
         self._mtime = 0
         raw = self.spark.readStream.format("text").option("maxFilesPerTrigger", "1").load(
             str(self.in_dir)
@@ -143,9 +148,9 @@ class LiveTrend(Workload):
                 frames = {m: render_frame(rows, metric=m) for m in self.lists}
         self.first = (rows, frames)
         self.reply_bytes = self.server.reply_bytes
+        # the rows catalog.table delivered, counted without a second read
         self.history_counts = sorted(
-            (r["metric"], r["count"])
-            for r in catalog.table(self.spark, "sensor_history").groupBy("metric").count().collect()
+            (r["metric"], r["count"]) for r in history.groupBy("metric").count().collect()
         )
 
     # -- the live loop
@@ -164,7 +169,7 @@ class LiveTrend(Workload):
         msgs = datagen.sensor_batch(
             self.seed, idx, sensors=self.SENSORS, metrics=self.METRICS,
             start_s=self.START_S + idx * self.SPAN_S, span_s=self.SPAN_S,
-            per_sensor=self.PER_SENSOR,
+            per_sensor=self.PER_SENSOR, burst=self.BURST,
         )
         self.batches.append(msgs)
         path = self.in_dir / f"batch-{idx:05d}.json"
@@ -175,6 +180,10 @@ class LiveTrend(Workload):
         self.q.processAllAvailable()
         if self.last is None or self.last[0] != idx:
             raise RuntimeError(f"micro-batch {idx} produced no day-bin result")
+        if self.tracer is not None:
+            self.python.append(plan_python_metrics(
+                self.q._jsq.streamingQuery().lastExecution().executedPlan()
+            ))
         return len(msgs)
 
     def round(self, index: int) -> list:
@@ -186,22 +195,28 @@ class LiveTrend(Workload):
         history = reference.fixed_grid_keep([
             (m, int(t) * 1_000_000, float(v)) for m, pairs in self.lists.items() for t, v in pairs
         ])
-        live = reference.anchored_keep([
+        batches = [
             [(f"{m['source']}.{k}", m["ts"] * 1_000_000, v) for m in msgs for k, v in m["value"].items()]
             for msgs in self.batches
-        ])
+        ]
+        readings = [r for b in batches for r in b]
+        live = reference.anchored_keep(batches)
         held = sorted((m, min(len(v), self.max_len + 1)) for m, v in self.lists.items())
         want_first = reference.day_bins(reference.retain(history))
         retained = reference.retain(history + live)
         want_last = reference.day_bins(retained)
+        # what a downsample that keeps every reading would give
+        undropped = reference.day_bins(reference.retain(history + readings))
 
         def ok_last(rows_: list[tuple]) -> bool:
-            return rows_ == want_last and sum(r[2] for r in rows_) == len(retained)
+            return rows_ == want_last
 
         got_first = reference.extents_rows(self.first[0])
         batch_id, rows, frames = self.last
         got_last = reference.extents_rows(rows)
         metrics = {r[0] for r in want_last}
+        if not 0 < len(live) < len(readings):
+            return False, f"the downsample keeps {len(live)} of {len(readings)} readings: its drop path is not run"
         if self.history_counts != held:
             return False, f"rows received per list {self.history_counts} differ from rows held {held}"
         if got_first != want_first:
@@ -214,11 +229,13 @@ class LiveTrend(Workload):
             return False, "a metric has no 4-line display frame"
         if not (reference.check_detects(lambda c: c == held, self.history_counts)
                 and reference.check_detects(lambda r: r == want_first, got_first)
-                and reference.check_detects(ok_last, got_last)):
+                and reference.check_detects(ok_last, got_last)
+                and not ok_last(undropped)):
             return False, "mutation self-test: a check accepted a perturbed output"
         return True, (
             f"per-list rows {held}; bootstrap {len(got_first)} and last batch {len(got_last)} "
-            f"extents rows over {len(metrics)} metrics, {len(retained)} retained samples"
+            f"extents rows over {len(metrics)} metrics, {len(retained)} retained samples; "
+            f"the downsample kept {len(live)} of {len(readings)} live readings"
         )
 
     def layer_metrics(self, n_ops: int) -> dict[str, float]:
@@ -239,6 +256,9 @@ class LiveTrend(Workload):
             "statestore.bytes": float(size),
             "sources.rows_per_batch": median([p["numInputRows"] for p in progs]),
             "transports.reply_bytes": float(self.reply_bytes),
+            # added to the REST API's figures, which miss the stateful node
+            "session.python_worker_ms_per_op": sum(ms for ms, _ in self.python[-n_ops:]) / n_ops,
+            "session.python_bytes_per_op": sum(b for _, b in self.python[-n_ops:]) / n_ops,
             **{
                 f"{name}_ms": self.tracer.within_ms("bootstrap", name)
                 for name in ("catalog.table", "transports.lrange", "transports.history_df",
@@ -272,9 +292,22 @@ QUERIES = (
 ORACLE_TABLES = ("customer", "orders", "lineitem", "events", "documents")
 
 
+def _observed(df):
+    """``df`` with an order-insensitive fingerprint of its rows (count and
+    sum of a row hash) collected while an action runs it."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    row_hash = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(2**31 - 1))
+    return obs, df.observe(obs, F.count(F.lit(1)).alias("rows"), F.sum(row_hash).alias("hash"))
+
+
 class QueryMix(Workload):
     """Registry queries over seeded tables, each forced through the
     ``noop`` sink, in a seeded order per round."""
+
+    rounds_per_10s = 2
 
     def setup(self) -> None:
         from trend_o_meter_spark.workload import registry
@@ -283,12 +316,12 @@ class QueryMix(Workload):
         datagen.write_tables(self.data, self.seed)
         print(f"phase: tables {since_process_start():.2f} s", flush=True)
         self.specs = {s.name: s for s in registry() if s.name in QUERIES}
-        # warm-up round: collect every query once and keep its result
-        # for the oracle check, which runs after the timed phase
-        self.results = {}
+        # warm-up round: collect every query once and keep its result for
+        # the oracle check, which runs after the timed phase
+        self.results, self.timed = {}, []
         for name in QUERIES:
-            df = self.specs[name].spark(self.spark, self.data)
-            self.results[name] = (df.columns, [tuple(r) for r in df.collect()])
+            obs, df = _observed(self.specs[name].spark(self.spark, self.data))
+            self.results[name] = (df.columns, [tuple(r) for r in df.collect()], obs)
 
     def oracles(self) -> dict[str, tuple]:
         """DuckDB over the same files, under a memory cap so a runaway
@@ -314,7 +347,9 @@ class QueryMix(Workload):
             with self.span(f"query.{name}.plan"):
                 df = self.specs[name].spark(self.spark, self.data)
             with self.span(f"query.{name}.exec"):
+                obs, df = _observed(df)
                 df.write.format("noop").mode("overwrite").save()
+            self.timed.append((name, obs))
             return 1
 
         run.name = name
@@ -329,7 +364,7 @@ class QueryMix(Workload):
         bad = []
         oracles = self.oracles()
         for name in QUERIES:
-            cols, rows = self.results[name]
+            cols, rows, obs = self.results[name]
             ocols, orows = oracles[name]
             want = reference.fingerprint(orows, ocols)
 
@@ -340,9 +375,21 @@ class QueryMix(Workload):
                 bad.append(f"{name}: spark {len(rows)} rows vs oracle {len(orows)}")
             elif not reference.check_detects(same, rows):
                 bad.append(f"{name}: empty result, or the check accepted a perturbed one")
+        # every timed output equals the checked one: same row count and
+        # order-insensitive hash sum, observed while it was written
+        want = {name: [tuple(obs.get.values())] for name, (_, _, obs) in self.results.items()}
+        for name, obs in self.timed:
+            got = [tuple(obs.get.values())]
+            if got != want[name]:
+                bad.append(f"{name}: timed output {got} differs from the checked one {want[name]}")
+            elif not reference.check_detects(lambda r, w=want[name]: r == w, got):
+                bad.append(f"{name}: the check accepted a perturbed timed output")
         if bad:
             return False, "; ".join(bad)
-        return True, f"{len(QUERIES)} queries hash-equal to their DuckDB oracles"
+        return True, (
+            f"{len(QUERIES)} queries hash-equal to their DuckDB oracles; "
+            f"{len(self.timed)} timed outputs equal to them"
+        )
 
     def layer_metrics(self, n_ops: int) -> dict[str, float]:
         out = {}
