@@ -5,7 +5,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Opt the test session into tmpfs scratch (session.scratch_dir): the
 # sandbox disk sustains ~10 MB/s fsync'd writes, which turns every

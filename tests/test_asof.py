@@ -175,3 +175,52 @@ def test_asof_pandas_matches_declarative_all_directions(spark):
         sa = sorted(map(tuple, a.collect()))
         sb = sorted(map(tuple, b.collect()))
         assert sa == sb, (direction, tol, sa, sb)
+
+
+def test_asof_null_time_keys_match_nothing_like_the_oracle(spark):
+    """A right row with a null ``right_on`` is never a match, and a left
+    row with a null ``left_on`` matches nothing, in every direction —
+    the SQL oracle's range predicate is never true on null (and its
+    unbounded ``nearest`` form guards null keys explicitly)."""
+    import duckdb
+
+    from trend_o_meter_spark.operators.asof import asof_join_sql
+
+    left = spark.createDataFrame(
+        [
+            (1, T0 + dt.timedelta(hours=5), 100),
+            (2, None, 100),  # null left time key
+            (3, T0 - dt.timedelta(hours=1), 200),  # only a null-ts right row before it
+        ],
+        "eid long, ts timestamp, k long",
+    )
+    right = spark.createDataFrame(
+        [
+            (10, T0 + dt.timedelta(hours=4), 100, 1.0),
+            (11, None, 100, 9.0),  # null right time key
+            (12, None, 200, 8.0),
+        ],
+        "rid long, rts timestamp, rk long, payload double",
+    )
+    con = duckdb.connect()
+    con.register("l", left.toPandas())
+    con.register("r", right.toPandas())
+    for direction, tol in [("backward", None), ("forward", None), ("nearest", None),
+                           ("backward", 3 * 3600.0), ("nearest", 3 * 3600.0)]:
+        got = {
+            r["eid"]: r["rid"]
+            for r in asof_join(
+                left, right, left_on="ts", right_on="rts", by_left="k",
+                by_right="rk", right_cols=("rid", "payload"), tiebreak="rid",
+                direction=direction, tolerance=tol,
+            ).collect()
+        }
+        sql = asof_join_sql(
+            "l", "r", left_on="ts", right_on="rts", by_left="k", by_right="rk",
+            left_cols=("eid", "ts", "k"), right_cols=("rid", "payload"),
+            tiebreak="rid", direction=direction, tolerance=tol,
+        )
+        want = {eid: rid for eid, rid in con.execute(f"SELECT eid, rid FROM ({sql})").fetchall()}
+        assert got == want, (direction, tol, got, want)
+        assert got[2] is None and got[3] is None, (direction, got)
+    assert want[1] == 10

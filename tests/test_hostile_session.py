@@ -46,3 +46,29 @@ def test_query_survives_ansi_mode(spark, name):
             spark.conf.unset("spark.sql.ansi.enabled")
         else:
             spark.conf.set("spark.sql.ansi.enabled", before)
+
+
+def test_shuffle_partitions_default_follows_host(monkeypatch):
+    """``spark.sql.shuffle.partitions`` defaults to the host core count
+    get_spark gives the master: ``SPARK_GRAFT_SHUFFLE`` wins, else
+    ``SPARK_GRAFT_CPUS``, else 32 — resolved at import, as a string."""
+    import importlib
+
+    from trend_o_meter_spark import session
+
+    def resolved(**env):
+        for k in ("SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_CPUS"):
+            monkeypatch.delenv(k, raising=False)
+        for k, v in env.items():
+            monkeypatch.setenv(k, v)
+        return importlib.reload(session).RUNTIME_CONF["spark.sql.shuffle.partitions"]
+
+    try:
+        assert resolved() == "32"
+        assert resolved(SPARK_GRAFT_CPUS="6") == "6"
+        assert resolved(SPARK_GRAFT_CPUS="6", SPARK_GRAFT_SHUFFLE="12") == "12"
+        assert resolved(SPARK_GRAFT_SHUFFLE="12") == "12"
+        assert resolved(SPARK_GRAFT_CPUS="*") == "32"  # local[*]: no count
+    finally:
+        monkeypatch.undo()
+        importlib.reload(session)

@@ -443,6 +443,100 @@ def test_stream_day_bins_end_to_end(spark, stream_dirs, tmp_path):
     assert len(f) == 4 and f[0].startswith("tmp")
 
 
+def test_stream_day_bins_resumes_at_checkpointed_partitions(spark, stream_dirs, tmp_path):
+    """A query checkpointed at 32 shuffle partitions and restarted under
+    a host-sized default keeps its 32 state partitions (Spark restores
+    ``spark.sql.shuffle.partitions`` from the offset log) and its
+    per-metric anchors, and still equals the batch twin.  Every
+    micro-batch, the all-corrupt empty one included, leaves no cached
+    RDD behind, and the empty one writes no state file."""
+    from pathlib import Path
+
+    from trend_o_meter_spark.operators.daybins import day_binned_extremes
+    from trend_o_meter_spark.streaming.pipeline import stream_day_bins
+    from trend_o_meter_spark.streaming.statestore import PartialStateTable
+
+    in_dir, ckpt = stream_dirs
+    state = str(tmp_path / "history")
+    metrics = ("temperature", "humidity", "pressure")
+    # offsets 0, 45, 100, 130, ... : some readings inside the 60 s gap
+    b0 = [_sensor(3600 * h + o, **{m: float(h * 7 + o) for m in metrics})
+          for h in range(30) for o in (0, 45, 100)]
+    # batch 1 opens 30 s after batch 0's last kept reading: only the
+    # carried anchor drops it
+    last = 3600 * 29 + 100
+    b1 = [_sensor(last + 30 + 3600 * h + o, **{m: float(500 - h + o) for m in metrics})
+          for h in range(20) for o in (0, 50, 90)]
+    results = {}
+    sc = spark.sparkContext
+    cached_before = set(sc._jsc.getPersistentRDDs().keySet())
+
+    def cached():
+        return set(sc._jsc.getPersistentRDDs().keySet()) - cached_before
+
+    def start():
+        kept, per_batch = stream_day_bins(
+            decode_sensor_stream(_read_text_stream(spark, in_dir)).filter(
+                F.col("corrupt").isNull()
+            ),
+            state_path=state,
+            on_result=lambda bid, df: results.__setitem__(bid, df.collect()),
+        )
+        return (
+            kept.writeStream.foreachBatch(per_batch)
+            .outputMode("append")
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+
+    def state_partitions(q):
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        q = start()
+        _write_batch(in_dir / "b0.json", b0)
+        q.processAllAvailable()
+        assert state_partitions(q) == 32
+        q.stop()
+        assert cached() == set()
+
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        q = start()
+        _write_batch(in_dir / "b1.json", b1)
+        q.processAllAvailable()
+        assert state_partitions(q) == 32
+        assert cached() == set()
+        n_files = PartialStateTable(state).file_count()
+        n_results = len(results)
+        (in_dir / "b2.json").write_text("{not json\n{still not\n")
+        q.processAllAvailable()
+        assert len(results) > n_results  # the empty batch ran
+        assert cached() == set()
+        assert PartialStateTable(state).file_count() == n_files
+        q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    parts = {p.name for p in (Path(ckpt) / "state" / "0").iterdir() if p.name.isdigit()}
+    assert len(parts) == 32
+
+    readings = spark.createDataFrame(
+        [(float(m["ts"]), k, v) for m in b0 + b1 for k, v in m["value"].items()],
+        "epoch double, metric string, value double",
+    ).select("metric", F.timestamp_seconds("epoch").alias("ts"), "value")
+    twin_kept = downsample_anchored(
+        readings, keys=("metric",), gap_seconds=60, newest_first=False
+    )
+    live_kept = PartialStateTable(state).read(spark)
+    assert sorted(map(tuple, live_kept.collect())) == sorted(
+        map(tuple, twin_kept.select("metric", "ts", "value").collect())
+    )
+    assert not any(r["ts"].timestamp() == BASE + last + 30 for r in live_kept.collect())
+    twin = day_binned_extremes(twin_kept, ts="ts", value="value", metric="metric")
+    assert sorted(map(tuple, results[max(results)])) == sorted(map(tuple, twin.collect()))
+
+
 def test_backfill_then_tail(spark, stream_dirs, tmp_path):
     """Lambda shape (SURVEY §1.1): seed the history table from a bounded
     batch backfill, then let the live stream append — the day-bin result
@@ -1263,6 +1357,36 @@ def test_statestore_schema_cache_invalidated_by_widening_append(spark, tmp_path)
     assert st._schema is None
     rows = {(r["k"], r["v"], r["n"]) for r in st.read(spark).collect()}
     assert rows == {("a", 1, None), ("b", 2, None), ("c", 3, 30)}
+
+
+def test_statestore_schema_cache_follows_compaction_and_type_change(spark, tmp_path):
+    """The cached read schema must not outlive the schema on disk: a
+    compaction whose transform widens the table, and a replayed batch
+    that rewrites a column under a new type, are both visible on the
+    next read.  A non-null write of an unchanged column keeps the cache
+    (parquet reads every column back as nullable)."""
+    from pyspark.sql import functions as F
+
+    from trend_o_meter_spark.streaming.statestore import PartialStateTable
+
+    st = PartialStateTable(str(tmp_path / "state"))
+    st.append(spark.createDataFrame([("a", 1)], "k string, v int"), 0)
+    assert {tuple(r) for r in st.read(spark).collect()} == {("a", 1)}
+    st.compact(spark, transform=lambda df: df.withColumn("n", F.lit(7)))
+    assert {tuple(r) for r in st.read(spark).collect()} == {("a", 1, 7)}
+    st.append(spark.range(1).select(F.lit("b").alias("k"), F.lit(2).alias("v"),
+                                    F.lit(8).alias("n")), 1)
+    assert st._schema is not None  # same fields, only non-null: fast path kept
+    assert {tuple(r) for r in st.read(spark).collect()} == {("a", 1, 7), ("b", 2, 8)}
+
+    st2 = PartialStateTable(str(tmp_path / "state2"))
+    st2.append(spark.createDataFrame([("a", 1)], "k string, v int"), 0)
+    assert st2.read(spark).schema["v"].dataType.simpleString() == "int"
+    # the replay of batch 0 rewrites its only partition with v as a string
+    st2.append(spark.createDataFrame([("a", "x")], "k string, v string"), 0)
+    out = st2.read(spark)
+    assert out.schema["v"].dataType.simpleString() == "string"
+    assert {tuple(r) for r in out.collect()} == {("a", "x")}
 
 
 def test_statestore_property_read_matches_model(spark, tmp_path):

@@ -141,6 +141,35 @@ def test_spark_operator_chunk_carryover_across_arrow_batches(spark):
     assert len(got) == 40
 
 
+def test_spark_operator_under_auto_shuffle_partitions(spark, monkeypatch):
+    """``spark.sql.shuffle.partitions=auto`` (a value some Spark
+    distributions accept; open-source Spark rejects it at set time, so
+    the conf read is patched here) must not crash the chunk
+    repartition: it falls back to the default parallelism."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    rows = [
+        (i, f"s{i % 2}", "en", " ".join(f"w{j}" for j in range(10 + i)))
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, source string, lang string, text string"
+    )
+    expect = sorted(map(tuple, warc_extract(df).collect()))
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "auto"
+    out = warc_extract(df)
+    monkeypatch.undo()
+    assert sorted(map(tuple, out.collect())) == expect
+
+
 def test_fuzz_parser_never_raises():
     # Arbitrary mutations of a real archive (plain and gzip) and raw
     # noise must never raise — malformed records cost records, not tasks.

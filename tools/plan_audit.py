@@ -54,7 +54,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from trend_o_meter_spark.lineage import AUDIT_ENV
 from trend_o_meter_spark.session import get_spark
@@ -258,7 +259,7 @@ def main() -> int:
     out.append("")
     out.append(f"{len(rows)} queries audited, {n_flagged} flagged.")
     text = "\n".join(out) + "\n"
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(_ROOT, "PLANS.md"), "w") as f:
         f.write(text)
     print(text.splitlines()[-1])
     return 1 if n_flagged else 0

@@ -15,7 +15,7 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # tmpfs scratch opt-in (round 14): correctness runs shuffle the same
 # bytes the bench does; on the sandbox's throttled disk a stock run is

@@ -264,7 +264,11 @@ def warc_extract(
     # carries at most ONE incomplete chunk across Arrow batch
     # boundaries — per-task memory stays O(batch + chunk), never
     # O(partition), which is what keeps this safe at corpus scale.
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # "auto" (an AQE setting some distributions accept) or any other
+    # non-integer: size to the cores
+    spark = df.sparkSession
+    n_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    n_parts = int(n_parts) if n_parts.isdigit() else spark.sparkContext.defaultParallelism
 
     def run_stream(pdfs):
         buf = None

@@ -116,7 +116,7 @@ def asof_join(
             _time_ord(F.col(right_on), rdt).alias("__ro"),
             *[F.col(c).alias(f"__v_{c}") for c in proj],
         ).alias("__rs"),
-    ).filter(F.col("__k").isNotNull())
+    ).filter(F.col("__k").isNotNull() & F.col("__ord").isNotNull())
     l = left.select(
         *lcols,
         F.col(by_left).alias("__k"),
@@ -149,7 +149,10 @@ def asof_join(
     lo = F.col("__ord")
 
     def within(pick, bound) -> "F.Column":
-        return pick.isNotNull() & (F.lit(True) if tol is None else bound)
+        # a null time key on either side matches nothing (the oracle's
+        # range predicate is never true on null)
+        ok = pick.isNotNull() & lo.isNotNull() & pick["__ro"].isNotNull()
+        return ok & (F.lit(True) if tol is None else bound)
 
     if direction == "backward":
         pick = running_pick(F.col("__ord").asc())
@@ -296,6 +299,8 @@ def asof_join_sql(
     else:
         if tol is not None:
             cond += f" AND {ro} >= {lo} - {tol} AND {ro} <= {lo} + {tol}"
+        else:  # no range predicate to reject a null time key
+            cond += f" AND {ro} IS NOT NULL AND {lo} IS NOT NULL"
         t_ord = f"-abs({ro} - {lo})"
         pref = f"CASE WHEN {ro} <= {lo} THEN 1 ELSE 0 END"
     pack = ", ".join(f"{c} := r.{c}" for c in right_cols)

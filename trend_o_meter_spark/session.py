@@ -22,6 +22,15 @@ BUILD_CONF: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
 }
 
+
+def _default_shuffle_partitions() -> str:
+    if "SPARK_GRAFT_SHUFFLE" in os.environ:
+        return os.environ["SPARK_GRAFT_SHUFFLE"]
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    # local[*] or a malformed count is no partition count
+    return cpus if cpus.isdigit() and int(cpus) > 0 else "32"
+
+
 # Conf that is runtime-settable: applied by tune() even on a SparkSession
 # we did not build (the driver hands us its own session — without these
 # here it would run the suite at shuffle.partitions=200 with arrow off;
@@ -31,9 +40,14 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # local[32] single-JVM testing default; a real cluster would size this
-    # to ~2-3x total cores via spark-submit conf.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    # Sized to the host get_spark runs on: SPARK_GRAFT_SHUFFLE wins, else
+    # the core count it gives the master (SPARK_GRAFT_CPUS), else 32.  A
+    # stateful query's partition count is one state-store commit and one
+    # Python task per partition per micro-batch, so a constant 32 on a
+    # 4-core host is mostly fixed cost.  Resumed streaming queries keep
+    # the count recorded in their checkpoint.  A real cluster would size
+    # this to ~2-3x total cores via spark-submit conf.
+    "spark.sql.shuffle.partitions": _default_shuffle_partitions(),
     # All timeseries arithmetic (epoch conversions, day-bin edges) assumes
     # UTC so results match the DuckDB oracle bit-for-bit.
     "spark.sql.session.timeZone": "UTC",

@@ -260,6 +260,14 @@ def stream_day_bins(
     (compaction still bounds the file count) or a number to override
     the horizon.
 
+    Each micro-batch runs the stateful downsample ONCE: the batch is
+    persisted before its two actions (the empty-batch check and the
+    state-table append) and unpersisted after, Spark's documented
+    ``foreachBatch`` pattern for more than one action on one batch.
+    Unpersisted, each action re-executes the whole
+    ``applyInPandasWithState`` stage — every state partition's Python
+    task and state-store commit, twice per batch.
+
     Returns the function for ``writeStream.foreachBatch`` — caller starts
     the query (checkpointing recommended).
     """
@@ -289,8 +297,12 @@ def stream_day_bins(
         spark = batch_df.sparkSession
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             st.compact(spark, transform=cull)
-        if not batch_df.isEmpty():
-            st.append(batch_df, batch_id)
+        batch_df.persist()  # two actions below; see the docstring
+        try:
+            if not batch_df.isEmpty():
+                st.append(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
         state = st.read(spark)
         if state is None:  # state path not created yet (all-empty batches)
             return

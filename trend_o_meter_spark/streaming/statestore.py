@@ -73,6 +73,19 @@ SEED_PARTITION = -2  # __batch_id value of the backfill (never compacted away)
 _MARKER = "_compacted_through"  # underscore-prefixed: invisible to parquet scans
 
 
+def _fits(cached, written) -> bool:
+    """Whether a field read back under the cached schema reads as
+    written: same name and type, and nullable if the write is.  Parquet
+    reads every column (and nested element) as nullable, so the type
+    compare ignores nested nullability and a non-null write fits a
+    nullable cached field."""
+    return (
+        cached is not None
+        and cached.dataType.simpleString() == written.dataType.simpleString()
+        and (cached.nullable or not written.nullable)
+    )
+
+
 class PartialStateTable:
     """A parquet table of per-micro-batch partial state (see module doc)."""
 
@@ -82,9 +95,10 @@ class PartialStateTable:
         # per-batch ``mergeSchema`` footer-merge job cost ~0.6-1.0 s of
         # every stream_rfm re-score (interleaved A/B, round 14) while the
         # state schema is fixed within a run.  The cache is invalidated
-        # by any append that carries a column the cached schema lacks
-        # (the only way this table's own writes can widen it), so a
-        # resumed pipeline upgrade still merge-reads once.
+        # by any append that carries a field (name, type or nullability)
+        # the cached schema lacks, and by every compaction (a transform
+        # may rewrite the schema), so a resumed pipeline upgrade still
+        # merge-reads once.
         self._schema = None
 
     # -- crash recovery ------------------------------------------------
@@ -134,9 +148,9 @@ class PartialStateTable:
         overwrites only this batch's own partition)."""
         self._recover()
         if self._schema is not None:
-            have = {f.name for f in self._schema.fields}
-            if any(f.name not in have for f in df.schema.fields):
-                self._schema = None  # widening write: re-merge on next read
+            have = {f.name: f for f in self._schema.fields}
+            if not all(_fits(have.get(f.name), f) for f in df.schema.fields):
+                self._schema = None  # schema-changing write: re-merge on next read
         (
             df.withColumn("__batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
@@ -221,6 +235,7 @@ class PartialStateTable:
         import shutil
 
         self._recover()
+        self._schema = None  # the rewrite (or its transform) may change it
         try:
             raw = spark.read.option("mergeSchema", "true").parquet(self.path)
         except AnalysisException:
