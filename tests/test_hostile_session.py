@@ -72,3 +72,49 @@ def test_shuffle_partitions_default_follows_host(monkeypatch):
     finally:
         monkeypatch.undo()
         importlib.reload(session)
+
+
+def test_tune_raises_on_a_rejected_runtime_conf_value(spark, monkeypatch):
+    """A ``RUNTIME_CONF`` value Spark rejects (``SPARK_GRAFT_SHUFFLE=auto``
+    is no partition count) raises, naming the key, and the session keeps
+    the value it had instead of silently running at another one."""
+    from pyspark.errors import IllegalArgumentException
+
+    from trend_o_meter_spark import session
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    monkeypatch.setitem(session.RUNTIME_CONF, key, "auto")
+    with pytest.raises(IllegalArgumentException, match=key):
+        session.tune(spark)
+    assert spark.conf.get(key) == before
+
+
+def test_python_workers_import_the_package_outside_the_checkout(tmp_path):
+    """A driver started outside the checkout with ``PYTHONPATH`` unset
+    still runs a ``mapInPandas`` operator: ``get_spark`` puts the
+    package's parent on the Python workers' path."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    script = f"""
+import sys
+sys.path.insert(0, {str(root)!r})
+from trend_o_meter_spark.session import get_spark
+from trend_o_meter_spark.workload import registry
+
+spark = get_spark("worker-path", master="local[1]")
+query = {{spec.name: spec for spec in registry()}}["warc_extract"]
+print("rows", query.spark(spark, {SF_DIR!r}).count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert int(run.stdout.split("rows")[-1]) > 0

@@ -9,7 +9,14 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+# The directory holding the trend_o_meter_spark package: Spark's Python
+# workers import the package's operator functions by name, and without
+# it on their path they can only find it when the JVM's working
+# directory happens to be the checkout.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Conf that must be set at session BUILD time — only JVM sizing truly
 # is (everything else runtime-settable lives in RUNTIME_CONF below so
@@ -114,6 +121,9 @@ def get_spark(app_name: str = "trend-o-meter-spark", master: str | None = None) 
         builder = builder.master(master)
     for k, v in BUILD_CONF.items():
         builder = builder.config(k, v)
+    # Only effective when this call launches the JVM (same contract as
+    # BUILD_CONF); Spark merges it with the worker's own PYTHONPATH.
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     sd = scratch_dir()
     if sd:
         # Only effective when this call launches the JVM (same contract
@@ -125,10 +135,16 @@ def get_spark(app_name: str = "trend-o-meter-spark", master: str | None = None) 
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conf; safe on externally-built sessions."""
+    """Apply runtime-settable conf; safe on externally-built sessions.
+
+    A key the session will not let us modify keeps its build-time value.
+    A value Spark rejects (``SPARK_GRAFT_SHUFFLE=auto`` is no partition
+    count) raises, naming the key, instead of leaving Spark's default
+    in place without a word."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in this build; build-time default applies
+        except AnalysisException as e:
+            if not (e.getCondition() or "").startswith("CANNOT_MODIFY"):
+                raise
     return spark

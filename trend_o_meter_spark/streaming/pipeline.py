@@ -9,6 +9,13 @@ Divergences from the reference, by design (documented, principled):
   one-per-event cull (F4) and the gap-repair hack (F7).
 * the event-time-gap trigger (F3) becomes a tumbling event-time window —
   same cadence, aligned grid.
+
+The live twins over mergeable partial state (``stream_day_bins`` and
+every ``stream_*`` taking a ``state_path``) each supply a per-batch
+partial, a compaction fold and a finalize;
+:func:`.statestore.incremental` runs them and holds the rules they
+share once: compaction cadence, replay-safe reads, the empty-batch
+guard and when the state is read at all.
 """
 
 from __future__ import annotations
@@ -16,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from .statestore import PartialStateTable, incremental
 
 
 def stream_tumbling_mean(
@@ -201,7 +210,6 @@ def seed_history(
     happens only at re-seed).
     """
     from ..operators.downsample import downsample_fixed_grid
-    from .statestore import PartialStateTable
 
     ds = downsample_fixed_grid(
         backfill.select(metric, ts, value), ts=ts, keys=(metric,), gap_seconds=gap_seconds
@@ -260,61 +268,41 @@ def stream_day_bins(
     (compaction still bounds the file count) or a number to override
     the horizon.
 
-    Each micro-batch runs the stateful downsample ONCE: the batch is
-    persisted before its two actions (the empty-batch check and the
-    state-table append) and unpersisted after, Spark's documented
-    ``foreachBatch`` pattern for more than one action on one batch.
-    Unpersisted, each action re-executes the whole
-    ``applyInPandasWithState`` stage — every state partition's Python
-    task and state-store commit, twice per batch.
-
-    Returns the function for ``writeStream.foreachBatch`` — caller starts
-    the query (checkpointing recommended).
+    Returns ``(kept, per_batch)``: the downsampled stream and the
+    :func:`.statestore.incremental` callable for
+    ``kept.writeStream.foreachBatch`` — caller starts the query
+    (checkpointing recommended).
     """
     from ..operators.daybins import day_binned_extremes
     from ..operators.retention import retain_window
     from .stateful import stream_anchored_downsample
-    from .statestore import PartialStateTable
 
     if retention_days == "auto":
         retention_days = float(max(day_bins))
     kept = stream_anchored_downsample(
         readings, ts=ts, value=value, metric=metric, gap_seconds=gap_seconds
     )
-    st = PartialStateTable(state_path)
     # the downsample CANONICALIZES its output columns to (metric, ts,
     # value) whatever the input names (DOWNSAMPLED_SCHEMA) — everything
     # downstream of the state table must use the canonical names, not
     # the caller's: a non-default `metric="sensor"` otherwise crashes
     # retain_window/day_binned_extremes on a missing column
-    cull = (
-        None
-        if retention_days is None
-        else (lambda df: retain_window(df, ts="ts", keys=("metric",), days=retention_days))
-    )
+    def cull(df: DataFrame) -> DataFrame:
+        if retention_days is None:
+            return df
+        return retain_window(df, ts="ts", keys=("metric",), days=retention_days)
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=cull)
-        batch_df.persist()  # two actions below; see the docstring
-        try:
-            if not batch_df.isEmpty():
-                st.append(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if cull is not None:
-            state = cull(state)
-        result = day_binned_extremes(
-            state, ts="ts", value="value", metric="metric",
+    per_batch = incremental(
+        state_path,
+        partial=lambda df, *_: df,
+        fold=cull,
+        finalize=lambda state, _: day_binned_extremes(
+            cull(state), ts="ts", value="value", metric="metric",
             day_bins=day_bins, min_data_hours=min_data_hours,
-        )
-        if on_result is not None:
-            on_result(batch_id, result)
-
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
     return kept, per_batch
 
 
@@ -330,45 +318,34 @@ def stream_trending(
     """Live trend detection: the streaming twin of
     ``operators.trend.trending_counts``.
 
-    Each micro-batch writes its PARTIAL per-(key, bucket) counts to a
-    replay-idempotent counts table (:class:`.statestore
-    .PartialStateTable` — a replayed micro-batch overwrites its own
-    partition instead of double-counting; late rows within the horizon
-    simply add to their bucket), then re-scores the re-summed table and
-    hands the result to ``on_result(batch_id, DataFrame)``.
+    Each micro-batch's PARTIAL per-(key, bucket) counts (late rows
+    within the horizon simply add to their bucket) are summed, re-scored
+    and handed to ``on_result(batch_id, DataFrame)``.
 
     Recompute input is the counts table — O(keys x active buckets), never
     O(events) — the same bounded-state argument as ``stream_day_bins``'s
-    downsampled history; every ``compact_every`` batches the partials
-    fold into one pre-summed base so the file count stays flat too.
-    Returns the ``foreachBatch`` callable.
+    downsampled history.  Returns the :func:`.statestore.incremental`
+    callable.
     """
     from ..operators.trend import score_bucket_counts
-    from .statestore import PartialStateTable
 
     b = (F.floor(F.unix_seconds(F.col(ts)) / bucket_seconds) * bucket_seconds).cast("long")
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy(*keys, "__b").agg(F.sum("__c").cast("long").alias("__c"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = batch_df.withColumn("__b", b).groupBy(*keys, "__b").agg(
-                F.count(F.lit(1)).alias("__c")
-            )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        result = score_bucket_counts(merge(state), keys=keys, bucket_seconds=bucket_seconds)
-        if on_result is not None:
-            on_result(batch_id, result)
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: df.withColumn("__b", b).groupBy(*keys, "__b").agg(
+            F.count(F.lit(1)).alias("__c")
+        ),
+        fold=merge,
+        finalize=lambda state, _: score_bucket_counts(
+            merge(state), keys=keys, bucket_seconds=bucket_seconds
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_cms(
@@ -386,38 +363,26 @@ def stream_cms(
     merged sketch (elementwise sum — CMS grids merge losslessly) is
     re-read and handed to ``on_result(batch_id, DataFrame)``.
 
-    The sum-merge is ADDITIVE, so at-least-once replay protection
-    matters here more than anywhere (a re-appended partial grid would
-    double every count it carries): :class:`.statestore
-    .PartialStateTable` makes the per-batch write idempotent and the
-    read replay-filtered, so the streaming sketch EQUALS the batch
-    sketch of the union (test-pinned, including the replay case).
-    State is O(batches x depth x width) grid rows between compactions;
-    every ``compact_every`` batches the partials fold into one
-    pre-summed O(depth x width) base grid.  Returns the
-    ``foreachBatch`` callable.
+    The sum-merge is ADDITIVE, so a re-appended partial grid would
+    double every count it carries; with the replay-safe state table the
+    streaming sketch EQUALS the batch sketch of the union (test-pinned,
+    including the replay case).  State is O(batches x depth x width)
+    grid rows between compactions, O(depth x width) after.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators.cms import cms_build
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("row_id", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(cms_build(batch_df, key=key, width=width, depth=depth), batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if on_result is not None:
-            on_result(batch_id, merge(state))
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: cms_build(df, key=key, width=width, depth=depth),
+        fold=merge,
+        finalize=lambda state, _: merge(state),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_hll_rollup(
@@ -436,48 +401,36 @@ def stream_hll_rollup(
     replay-idempotent sketch table; estimates come from
     ``hll_union_agg`` over the merged table.  HLL union is the lossless
     register-wise max — idempotent, so a replayed partial could never
-    skew the estimate anyway — but the shared
-    :class:`.statestore.PartialStateTable` still bounds the file count
-    (folding partials into per-(key, day) union sketches every
-    ``compact_every`` batches) and keeps all four foreachBatch
-    pipelines on one state discipline.
+    skew the estimate anyway; compaction folds the partials into
+    per-(key, day) union sketches.
 
     The estimate re-aggregation never rescans raw events — the same
     hypertable argument as the batch rollup.  Returns the
-    ``foreachBatch`` callable; ``on_result(batch_id, DataFrame)`` gets
-    ``*keys, approx_users`` per key over all days seen.
+    :func:`.statestore.incremental` callable;
+    ``on_result(batch_id, DataFrame)`` gets ``*keys, approx_users`` per
+    key over all days seen.
     """
-    from .statestore import PartialStateTable
-
     b = F.date_trunc("day", F.col(ts)) if bucket_seconds == 86400 else (
         F.timestamp_seconds(
             (F.floor(F.unix_seconds(F.col(ts)) / bucket_seconds) * bucket_seconds).cast("long")
         )
     )
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy(*keys, "__day").agg(F.hll_union_agg("__sk").alias("__sk"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = batch_df.withColumn("__day", b).groupBy(*keys, "__day").agg(
-                F.hll_sketch_agg(id_col).alias("__sk")
-            )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        result = state.groupBy(*keys).agg(
+    return incremental(
+        state_path,
+        partial=lambda df, *_: df.withColumn("__day", b).groupBy(*keys, "__day").agg(
+            F.hll_sketch_agg(id_col).alias("__sk")
+        ),
+        fold=merge,
+        finalize=lambda state, _: state.groupBy(*keys).agg(
             F.hll_sketch_estimate(F.hll_union_agg("__sk")).alias("approx_users")
-        )
-        if on_result is not None:
-            on_result(batch_id, result)
-
-    return per_batch
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def run_to_memory_sink(
@@ -522,35 +475,24 @@ def stream_histogram(
     and handed to ``on_result(batch_id, DataFrame)``, ready for
     ``histogram_quantiles``.
 
-    Same additive-state discipline as :func:`stream_cms` (a re-appended
-    partial would double its counts; :class:`.statestore
-    .PartialStateTable` makes the write idempotent and the read
-    replay-filtered), so the streaming sketch EQUALS the batch sketch of
-    the union (test-pinned).  State is O(batches x bins) rows between
-    compactions; every ``compact_every`` batches the partials fold into
-    one pre-summed O(bins) base.  Returns the ``foreachBatch`` callable.
+    Additive state like :func:`stream_cms`, so the streaming sketch
+    EQUALS the batch sketch of the union (test-pinned).  State is
+    O(batches x bins) rows between compactions, O(bins) after.  Returns
+    the :func:`.statestore.incremental` callable.
     """
     from ..operators.histogram import histogram_sketch
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("bin").agg(F.sum("cnt").cast("long").alias("cnt"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(histogram_sketch(batch_df, value=value, bin_width=bin_width), batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if on_result is not None:
-            on_result(batch_id, merge(state))
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: histogram_sketch(df, value=value, bin_width=bin_width),
+        fold=merge,
+        finalize=lambda state, _: merge(state),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_priority_sample(
@@ -573,44 +515,29 @@ def stream_priority_sample(
     max(w, tau) estimator and handed to ``on_result(batch_id,
     DataFrame)``.
 
-    Same :class:`.statestore.PartialStateTable` discipline as
-    :func:`stream_histogram`; because the merge is lossless the
-    streaming sample EQUALS the batch sample of the union bit-for-bit
-    (test-pinned) — priority sampling is a true mergeable sketch over
-    the corpus seen so far.  State is O(batches x strata x k) rows
-    between compactions, O(strata x k) after.  Returns the
-    ``foreachBatch`` callable.
+    Because the merge is lossless the streaming sample EQUALS the batch
+    sample of the union bit-for-bit (test-pinned) — priority sampling
+    is a true mergeable sketch over the corpus seen so far.  State is
+    O(batches x strata x k) rows between compactions, O(strata x k)
+    after.  Returns the :func:`.statestore.incremental` callable.
     """
     from ..llm.sampling import priority_finalize, priority_ranked, rerank
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return rerank(df, strata=strata, id_col=id_col, k=k)
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(
-                priority_ranked(
-                    batch_df, weight=weight, strata=strata, id_col=id_col,
-                    k=k, salt=salt,
-                ),
-                batch_id,
-            )
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if on_result is not None:
-            on_result(
-                batch_id,
-                priority_finalize(merge(state), strata=strata, id_col=id_col, k=k),
-            )
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: priority_ranked(
+            df, weight=weight, strata=strata, id_col=id_col, k=k, salt=salt
+        ),
+        fold=merge,
+        finalize=lambda state, _: priority_finalize(
+            merge(state), strata=strata, id_col=id_col, k=k
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_tdigest(
@@ -630,40 +557,27 @@ def stream_tdigest(
     handed to ``on_result(batch_id, DataFrame)``, ready for
     ``tdigest_quantiles``.
 
-    Same :class:`.statestore.PartialStateTable` discipline as
-    :func:`stream_histogram` (re-appended partial replaces, never
-    doubles).  Unlike the six integer families the digest merge is
-    LOSSY-bounded, not bit-lossless — so the twin contract is "the
-    streaming digest's quantile estimates satisfy the same rank bounds
-    as batch" (test-pinned), not bit equality.  State is
-    O(batches x keys) rows (each <= ~2*delta centroids) between
-    compactions; compaction folds them into O(keys) rows, keeping state
-    flat forever.  Returns the ``foreachBatch`` callable.
+    Unlike the six integer families the digest merge is LOSSY-bounded,
+    not bit-lossless — so the twin contract is "the streaming digest's
+    quantile estimates satisfy the same rank bounds as batch"
+    (test-pinned), not bit equality.  State is O(batches x keys) rows
+    (each <= ~2*delta centroids) between compactions; compaction folds
+    them into O(keys) rows, keeping state flat forever.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators.tdigest import tdigest_merge, tdigest_sketch
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return tdigest_merge(df, keys=keys, delta=delta)
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(
-                tdigest_sketch(batch_df, value=value, keys=keys, delta=delta),
-                batch_id,
-            )
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if on_result is not None:
-            on_result(batch_id, merge(state))
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: tdigest_sketch(df, value=value, keys=keys, delta=delta),
+        fold=merge,
+        finalize=lambda state, _: merge(state),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_moments(
@@ -684,38 +598,24 @@ def stream_moments(
     handed to ``on_result(batch_id, DataFrame)``, ready for
     ``moments_stats``.
 
-    Same additive-state discipline as :func:`stream_cms` /
-    :func:`stream_histogram` (a re-appended partial would double its
-    sums; :class:`.statestore.PartialStateTable` makes the write
-    idempotent and the read replay-filtered), so the streaming sketch
+    Additive state like :func:`stream_cms`, so the streaming sketch
     EQUALS the batch sketch of the union (test-pinned).  State is
-    O(batches x keys) rows between compactions; every ``compact_every``
-    batches the partials fold into one pre-summed O(keys) base.
-    Returns the ``foreachBatch`` callable.
+    O(batches x keys) rows between compactions, O(keys) after.  Returns
+    the :func:`.statestore.incremental` callable.
     """
     from ..operators.moments import moments_merge, moments_sketch
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return moments_merge(df, keys=keys)
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(
-                moments_sketch(batch_df, value=value, keys=keys, scale=scale), batch_id
-            )
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if on_result is not None:
-            on_result(batch_id, merge(state))
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: moments_sketch(df, value=value, keys=keys, scale=scale),
+        fold=merge,
+        finalize=lambda state, _: merge(state),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_kmv(
@@ -737,32 +637,22 @@ def stream_kmv(
 
     Like HLL (a register-max union) and unlike the additive CMS /
     histogram / moments families, the KMV merge is IDEMPOTENT — a
-    replayed partial cannot skew the sketch — but the shared
-    :class:`.statestore.PartialStateTable` still bounds file count and
-    keeps all five foreachBatch sketch pipelines on one state
-    discipline.  Returns the ``foreachBatch`` callable.
+    replayed partial cannot skew the sketch.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators.theta import kmv_merge, kmv_sketch
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return kmv_merge(df, keys=keys, k=k)
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(kmv_sketch(batch_df, keys=keys, id_col=id_col, k=k), batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if on_result is not None:
-            on_result(batch_id, merge(state))
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: kmv_sketch(df, keys=keys, id_col=id_col, k=k),
+        fold=merge,
+        finalize=lambda state, _: merge(state),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_bloom(
@@ -785,29 +675,21 @@ def stream_bloom(
     Like HLL and KMV (and unlike the additive CMS/histogram/moments
     merges), the Bloom merge is IDEMPOTENT — a replayed partial sets
     bits that are already set — so at-least-once delivery cannot skew
-    the filter.  Returns the ``foreachBatch`` callable.
+    the filter.  Returns the :func:`.statestore.incremental` callable.
     """
     from ..operators.bloom import bloom_build, bloom_merge
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return bloom_merge(df, keys=keys)
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(bloom_build(batch_df, key=key, keys=keys, m=m, k=k), batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        if on_result is not None:
-            on_result(batch_id, merge(state))
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: bloom_build(df, key=key, keys=keys, m=m, k=k),
+        fold=merge,
+        finalize=lambda state, _: merge(state),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_seasonal_profile(
@@ -831,54 +713,43 @@ def stream_seasonal_profile(
     seasonal``, ready to broadcast against incoming samples for live
     "wild for 3am" residuals.
 
-    Additive state (a replayed partial would double its sums) — the
-    same :class:`.statestore.PartialStateTable` discipline as
-    :func:`stream_cms`.  State is O(keys x phases) per partial (24
-    rows/key under the defaults), folding to one base every
-    ``compact_every`` batches.  Returns the ``foreachBatch`` callable.
+    Additive state like :func:`stream_cms`.  State is O(keys x phases)
+    per partial (24 rows/key under the defaults).  Returns the
+    :func:`.statestore.incremental` callable.
     """
-    from .statestore import PartialStateTable
-
     phase = F.floor(
         (F.unix_seconds(F.col(ts)) % period_seconds) / bucket_seconds
     ).cast("int")
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy(*keys, "phase").agg(
             F.sum("__s").alias("__s"), F.sum("__c").cast("long").alias("__c")
         )
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = (
-                batch_df.filter(F.col(value).isNotNull())
-                .withColumn("phase", phase)
-                .groupBy(*keys, "phase")
-                .agg(
-                    F.sum(F.col(value).cast("decimal(28,8)")).alias("__s"),
-                    F.count(F.lit(1)).cast("long").alias("__c"),
-                )
+    def partial(df: DataFrame, *_) -> DataFrame:
+        return (
+            df.filter(F.col(value).isNotNull())
+            .withColumn("phase", phase)
+            .groupBy(*keys, "phase")
+            .agg(
+                F.sum(F.col(value).cast("decimal(28,8)")).alias("__s"),
+                F.count(F.lit(1)).cast("long").alias("__c"),
             )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        m = merge(state)
+        )
+
+    def finalize(state: DataFrame, _) -> DataFrame:
         # identical expression shape to the batch profile: decimal total
         # cast double, divided by the long count
-        profile = m.select(
+        return merge(state).select(
             *keys,
             "phase",
             (F.col("__s").cast("double") / F.col("__c")).alias("seasonal"),
         )
-        if on_result is not None:
-            on_result(batch_id, profile)
 
-    return per_batch
+    return incremental(
+        state_path, partial=partial, fold=merge, finalize=finalize,
+        on_result=on_result, compact_every=compact_every,
+    )
 
 
 def stream_mad(
@@ -898,9 +769,7 @@ def stream_mad(
     carried as the MERGEABLE keyed histogram sketch
     (``operators.histogram.histogram_sketch_keyed``) instead of an
     exact value multiset — state is O(keys x bins) however long the
-    stream runs, and a replayed micro-batch cannot double-count
-    (additive state on the shared :class:`.statestore
-    .PartialStateTable` discipline).
+    stream runs.
 
     Each batch: append the batch's partial keyed histogram, re-estimate
     per-key ``med_est/mad_est`` from the merged sketch
@@ -912,46 +781,43 @@ def stream_mad(
     population the same way).  ``on_profile(batch_id, DataFrame)`` gets
     ``*keys, med_est, mad_est``; ``on_result(batch_id, DataFrame)``
     gets the flagged rows ``*keys, ts, value, med_est, mad_est,
-    robust_z``.  Returns the ``foreachBatch`` callable.
+    robust_z``.  Returns the :func:`.statestore.incremental` callable.
     """
     from ..operators.histogram import histogram_median_mad, histogram_sketch_keyed
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy(*keys, "bin").agg(F.sum("cnt").cast("long").alias("cnt"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(
-                histogram_sketch_keyed(
-                    batch_df, keys=keys, value=value, bin_width=bin_width
-                ),
-                batch_id,
-            )
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
+    def finalize(state: DataFrame, batch: DataFrame):
         prof = histogram_median_mad(merge(state), keys=keys, bin_width=bin_width)
+        scored = batch.join(F.broadcast(prof), list(keys)).withColumn(
+            "robust_z",
+            F.lit(0.6745)
+            * (F.col(value) - F.col("med_est"))
+            / F.nullif(F.col("mad_est"), F.lit(0.0)),
+        )
+        flagged = scored.filter(
+            F.abs(F.col("robust_z")) > F.lit(float(z_threshold))
+        ).select(*keys, ts, value, "med_est", "mad_est", "robust_z")
+        return prof, flagged
+
+    def emit(batch_id: int, out) -> None:
+        prof, flagged = out
         if on_profile is not None:
             on_profile(batch_id, prof)
         if on_result is not None:
-            scored = batch_df.join(F.broadcast(prof), list(keys)).withColumn(
-                "robust_z",
-                F.lit(0.6745)
-                * (F.col(value) - F.col("med_est"))
-                / F.nullif(F.col("mad_est"), F.lit(0.0)),
-            )
-            flagged = scored.filter(
-                F.abs(F.col("robust_z")) > F.lit(float(z_threshold))
-            ).select(*keys, ts, value, "med_est", "mad_est", "robust_z")
             on_result(batch_id, flagged)
 
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: histogram_sketch_keyed(
+            df, keys=keys, value=value, bin_width=bin_width
+        ),
+        fold=merge,
+        finalize=finalize,
+        on_result=None if on_result is None and on_profile is None else emit,
+        compact_every=compact_every,
+    )
 
 
 def stream_theil_sen(
@@ -981,50 +847,41 @@ def stream_theil_sen(
     Scale: state is O(keys x span/bucket) rows forever (the same
     span-bounded contract as the batch oracle); the sample stream
     contributes one partial-aggregating groupBy per batch and is never
-    re-shuffled.  Additive state on the replay-idempotent
-    :class:`.statestore.PartialStateTable` discipline, like
-    :func:`stream_seasonal_profile`.  Returns the ``foreachBatch``
-    callable.
+    re-shuffled.  Additive state, like :func:`stream_seasonal_profile`.
+    Returns the :func:`.statestore.incremental` callable.
     """
     from ..operators.trend import theil_sen_from_means
-    from .statestore import PartialStateTable
 
     b = (F.floor(F.unix_seconds(F.col(ts)) / bucket_seconds) * bucket_seconds).cast(
         "long"
     )
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy(*keys, "__b").agg(
             F.sum("__s").alias("__s"), F.sum("__c").cast("long").alias("__c")
         )
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = (
-                batch_df.filter(F.col(value).isNotNull())
-                .groupBy(*keys, b.alias("__b"))
-                .agg(
-                    F.sum(F.col(value).cast("decimal(28,8)")).alias("__s"),
-                    F.count(F.lit(1)).cast("long").alias("__c"),
-                )
+    def partial(df: DataFrame, *_) -> DataFrame:
+        return (
+            df.filter(F.col(value).isNotNull())
+            .groupBy(*keys, b.alias("__b"))
+            .agg(
+                F.sum(F.col(value).cast("decimal(28,8)")).alias("__s"),
+                F.count(F.lit(1)).cast("long").alias("__c"),
             )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:  # state path not created yet (all-empty batches)
-            return
-        m = merge(state)
+        )
+
+    def finalize(state: DataFrame, _) -> DataFrame:
         # identical expression shape to the batch operator's bucket means
-        means = m.select(
+        means = merge(state).select(
             *keys, "__b", (F.col("__s").cast("double") / F.col("__c")).alias("__m")
         )
-        if on_result is not None:
-            on_result(batch_id, theil_sen_from_means(means, keys=keys))
+        return theil_sen_from_means(means, keys=keys)
 
-    return per_batch
+    return incremental(
+        state_path, partial=partial, fold=merge, finalize=finalize,
+        on_result=on_result, compact_every=compact_every,
+    )
 
 
 def stream_psi(
@@ -1048,40 +905,29 @@ def stream_psi(
 
     Same term arithmetic as the batch operator (epsilon clamp, per-bin
     ``(p-q)*ln(p/q)`` quantized at 1e-6 into BIGINTs, exact integer
-    total).  State is O(occupied bins) counts on the replay-idempotent
-    :class:`.statestore.PartialStateTable` discipline.
+    total).  State is O(occupied bins) counts.
     ``on_result(batch_id, DataFrame)`` receives ``bin_lo, n_ref,
-    n_live, psi_term, psi_total``.  Returns the ``foreachBatch``
-    callable.
+    n_live, psi_term, psi_total``.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..llm.text import psi_from_counts
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("bin_lo").agg(F.sum("__c").cast("long").alias("__c"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = (
-                batch_df.filter(F.col(value).isNotNull())
-                .groupBy(
-                    (F.floor(F.col(value) / bin_width) * bin_width)
-                    .cast("long")
-                    .alias("bin_lo")
-                )
-                .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+    def partial(df: DataFrame, *_) -> DataFrame:
+        return (
+            df.filter(F.col(value).isNotNull())
+            .groupBy(
+                (F.floor(F.col(value) / bin_width) * bin_width)
+                .cast("long")
+                .alias("bin_lo")
             )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        live = merge(state)
-        ref = spark.createDataFrame(
+            .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+        )
+
+    def finalize(state: DataFrame, _) -> DataFrame:
+        ref = state.sparkSession.createDataFrame(
             [(int(k), int(v)) for k, v in ref_counts.items()] or [(0, 0)],
             "bin_lo long, n_a long",
         )
@@ -1089,7 +935,7 @@ def stream_psi(
         # clamp/ln/quantization — the live gate can never desynchronize
         # from the batch gate's arithmetic
         bins = (
-            live.select("bin_lo", F.col("__c").alias("n_b"))
+            merge(state).select("bin_lo", F.col("__c").alias("n_b"))
             .join(F.broadcast(ref), "bin_lo", "full_outer")
             .select(
                 "bin_lo",
@@ -1097,17 +943,18 @@ def stream_psi(
                 F.coalesce(F.col("n_b"), F.lit(0)).cast("long").alias("n_b"),
             )
         )
-        out = psi_from_counts(bins, eps=eps).select(
+        return psi_from_counts(bins, eps=eps).select(
             "bin_lo",
             F.col("n_a").alias("n_ref"),
             F.col("n_b").alias("n_live"),
             "psi_term",
             "psi_total",
         )
-        if on_result is not None:
-            on_result(batch_id, out)
 
-    return per_batch
+    return incremental(
+        state_path, partial=partial, fold=merge, finalize=finalize,
+        on_result=on_result, compact_every=compact_every,
+    )
 
 
 def stream_trend_slope(
@@ -1127,16 +974,14 @@ def stream_trend_slope(
     and the merged sums EQUAL the batch sums bit-for-bit), and the
     snapshot runs the identical closed-form tail
     (``trend_slope_from_sums``).  State is O(keys x span/bucket) rows
-    of five decimals on the replay-idempotent
-    :class:`.statestore.PartialStateTable` discipline; the sample
-    stream contributes one partial-aggregating groupBy per batch.
+    of five decimals; the sample stream contributes one
+    partial-aggregating groupBy per batch.
     ``on_result(batch_id, DataFrame)`` receives the batch operator's
-    exact output columns.  Returns the ``foreachBatch`` callable.
+    exact output columns.  Returns the :func:`.statestore.incremental`
+    callable.
     """
     from ..operators.trend import trend_slope_from_sums
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
     bucket = (
         F.floor(F.unix_seconds(F.col(ts)) / bucket_seconds) * bucket_seconds
     ).alias("__b")
@@ -1150,34 +995,31 @@ def stream_trend_slope(
             F.sum("sxx").alias("sxx"),
         )
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            x = (
-                F.unix_micros(F.col(ts)) - F.col("__b") * F.lit(1_000_000)
-            ).cast("decimal(19,0)")
-            y = F.col(value).cast("decimal(18,6)")
-            partial = (
-                batch_df.withColumn("__b", bucket)
-                .groupBy(*keys, "__b")
-                .agg(
-                    F.count(F.lit(1)).alias("n_samples"),
-                    F.sum(x).alias("sx"),
-                    F.sum(y).alias("sy"),
-                    F.sum(x * y).alias("sxy"),
-                    F.sum(x * x).alias("sxx"),
-                )
+    def partial(df: DataFrame, *_) -> DataFrame:
+        x = (
+            F.unix_micros(F.col(ts)) - F.col("__b") * F.lit(1_000_000)
+        ).cast("decimal(19,0)")
+        y = F.col(value).cast("decimal(18,6)")
+        return (
+            df.withColumn("__b", bucket)
+            .groupBy(*keys, "__b")
+            .agg(
+                F.count(F.lit(1)).alias("n_samples"),
+                F.sum(x).alias("sx"),
+                F.sum(y).alias("sy"),
+                F.sum(x * y).alias("sxy"),
+                F.sum(x * x).alias("sxx"),
             )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            on_result(batch_id, trend_slope_from_sums(merge(state), keys=keys))
+        )
 
-    return per_batch
+    return incremental(
+        state_path,
+        partial=partial,
+        fold=merge,
+        finalize=lambda state, _: trend_slope_from_sums(merge(state), keys=keys),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_metric_correlation(
@@ -1196,15 +1038,13 @@ def stream_metric_correlation(
     snapshot runs the identical pairing + exact-decimal Pearson tail
     (``metric_correlation_from_totals``), so the live correlation
     matrix EQUALS the batch answer over the union bit-for-bit at every
-    micro-batch.  State is O(metrics x span/bucket) longs on the
-    :class:`.statestore.PartialStateTable` discipline.
+    micro-batch.  State is O(metrics x span/bucket) longs.
     ``on_result(batch_id, DataFrame)`` receives ``metric_a, metric_b,
-    n_buckets, corr``.  Returns the ``foreachBatch`` callable.
+    n_buckets, corr``.  Returns the :func:`.statestore.incremental`
+    callable.
     """
     from ..operators.trend import metric_correlation_from_totals
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
     b = (
         F.floor(F.unix_seconds(F.col(ts)) / bucket_seconds) * bucket_seconds
     ).cast("long")
@@ -1213,24 +1053,16 @@ def stream_metric_correlation(
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("__m", "__b").agg(F.sum("__t").cast("long").alias("__t"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = (
-                batch_df.filter(F.col(value).isNotNull())
-                .groupBy(F.col(metric_col).alias("__m"), b.alias("__b"))
-                .agg(F.sum(yq).cast("long").alias("__t"))
-            )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            on_result(batch_id, metric_correlation_from_totals(merge(state)))
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: df.filter(F.col(value).isNotNull())
+        .groupBy(F.col(metric_col).alias("__m"), b.alias("__b"))
+        .agg(F.sum(yq).cast("long").alias("__t")),
+        fold=merge,
+        finalize=lambda state, _: metric_correlation_from_totals(merge(state)),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_label_balance(
@@ -1249,41 +1081,26 @@ def stream_label_balance(
     (``label_balance_from_counts``) — bit-equal to the batch report
     over the union.  The live form of the training-mix QA: a crawl
     whose language mix starts collapsing alarms within a micro-batch,
-    not at the next offline audit.  State is O(classes) counts on the
-    replay-idempotent :class:`.statestore.PartialStateTable`
-    discipline.  Returns the ``foreachBatch`` callable.
+    not at the next offline audit.  State is O(classes) counts.
+    Returns the :func:`.statestore.incremental` callable.
     """
     from ..llm.text import label_balance_from_counts
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("label").agg(F.sum("n").cast("long").alias("n"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = (
-                batch_df.filter(F.col(label).isNotNull())
-                .groupBy(F.col(label).alias("label"))
-                .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            on_result(
-                batch_id,
-                label_balance_from_counts(
-                    merge(state), min_share_alert=min_share_alert
-                ),
-            )
-
-    return per_batch
+    return incremental(
+        state_path,
+        partial=lambda df, *_: df.filter(F.col(label).isNotNull())
+        .groupBy(F.col(label).alias("label"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n")),
+        fold=merge,
+        finalize=lambda state, _: label_balance_from_counts(
+            merge(state), min_share_alert=min_share_alert
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_ks(
@@ -1306,44 +1123,33 @@ def stream_ks(
     off the same state discipline.
 
     ``ref_counts`` is ``{value: n}`` from the reference corpus.  State
-    is O(distinct values) counts on the replay-idempotent
-    :class:`.statestore.PartialStateTable` discipline.
+    is O(distinct values) counts.
     ``on_result(batch_id, DataFrame)`` receives the batch operator's
     one-row ``n_a (live), n_b (ref), ks_stat, at_value``.  Returns the
-    ``foreachBatch`` callable.
+    :func:`.statestore.incremental` callable.
     """
     from ..llm.text import ks_from_counts
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("v").agg(F.sum("__c").cast("long").alias("__c"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = (
-                batch_df.filter(F.col(value).isNotNull())
-                # floor, not cast: cast truncates toward zero, merging
-                # negative and positive fractional mass into bin 0 and
-                # corrupting the ECDF support for continuous streams
-                .groupBy(F.floor(F.col(value)).cast("long").alias("v"))
-                .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-            )
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        live = merge(state)
-        ref = spark.createDataFrame(
+    def partial(df: DataFrame, *_) -> DataFrame:
+        return (
+            df.filter(F.col(value).isNotNull())
+            # floor, not cast: cast truncates toward zero, merging
+            # negative and positive fractional mass into bin 0 and
+            # corrupting the ECDF support for continuous streams
+            .groupBy(F.floor(F.col(value)).cast("long").alias("v"))
+            .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+        )
+
+    def finalize(state: DataFrame, _) -> DataFrame:
+        ref = state.sparkSession.createDataFrame(
             [(int(k), int(v)) for k, v in ref_counts.items()] or [(0, 0)],
             "v long, cb long",
         )
         counts = (
-            live.select("v", F.col("__c").alias("ca"))
+            merge(state).select("v", F.col("__c").alias("ca"))
             .join(F.broadcast(ref), "v", "full_outer")
             .select(
                 "v",
@@ -1351,10 +1157,12 @@ def stream_ks(
                 F.coalesce(F.col("cb"), F.lit(0)).cast("long").alias("cb"),
             )
         )
-        if on_result is not None:
-            on_result(batch_id, ks_from_counts(counts, bucket_width=bucket_width))
+        return ks_from_counts(counts, bucket_width=bucket_width)
 
-    return per_batch
+    return incremental(
+        state_path, partial=partial, fold=merge, finalize=finalize,
+        on_result=on_result, compact_every=compact_every,
+    )
 
 
 def stream_funnel(
@@ -1392,15 +1200,14 @@ def stream_funnel(
     row — a clean in-order run emits no such row, keeping the report
     exactly batch-equal.
 
-    State is O(steps x users) rows on the replay-idempotent
-    :class:`.statestore.PartialStateTable` discipline (a replayed batch
-    recomputes the same deterministic partial and overwrites its own
-    partition).  Returns the ``foreachBatch`` callable.
+    State is O(steps x users) rows.  The partial depends on the carried
+    frontiers, so the twin runs ``carried``: a replayed batch re-reads
+    the prior its first attempt saw, recomputes the same partial and
+    overwrites its own partition.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators.analytics import funnel_report_from_counts
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
     step_list = list(steps)
 
     def _ensure_n(df: DataFrame) -> DataFrame:
@@ -1432,98 +1239,89 @@ def stream_funnel(
             )
         )
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # hold a replayed batch's own partition out of the fold so the
-            # prior read below can exclude it (MIN-merge would absorb it
-            # anyway, but identical-prior replay is the stronger contract)
-            st.compact(spark, transform=merge, exclude_batch=batch_id)
-        prior = st.read(spark, exclude_batch=batch_id)
-        if not batch_df.isEmpty():
-            if prior is not None:
-                # materialize: the per-step partial derived from prior is
-                # written back (dynamic overwrite) to the path prior
-                # scans; also read once instead of once per funnel step
-                prior = prior.localCheckpoint()
-            partials = []
-            prev_f: DataFrame | None = None
-            for i, step in enumerate(step_list):
-                old_i = (
-                    merge(prior.filter(F.col("__step") == i)).select("__u", "__ft")
-                    if prior is not None
-                    else None
-                )
-                ev = batch_df.filter(F.col(event_type) == step).select(
-                    F.col(user).alias("__u"), F.col(ts).alias("__t")
-                )
-                if i == 0:
-                    cand = ev.groupBy("__u").agg(F.min("__t").alias("__ft"))
-                else:
-                    cand = (
-                        ev.join(prev_f.select("__u", F.col("__ft").alias("__prev")), "__u")
-                        .filter(F.col("__t") > F.col("__prev"))
-                        .groupBy("__u")
-                        .agg(F.min("__t").alias("__ft"))
-                    )
-                new_f = (
-                    cand
-                    if old_i is None
-                    else cand.unionByName(old_i)
-                    .groupBy("__u")
-                    .agg(F.min("__ft").alias("__ft"))
-                )
-                partials.append(
-                    cand.select(
-                        F.lit(i).alias("__step"),
-                        "__u",
-                        "__ft",
-                        F.lit(None).cast("long").alias("__n"),
-                    )
-                )
-                prev_f = new_f
-            # in-order contract observability: per-user high-water event
-            # ts (sentinel step -1, max-merge) and a counter of rows that
-            # arrived below the carried mark (sentinel step -2, sum-merge)
-            consumed = batch_df.filter(F.col(event_type).isin(*step_list)).select(
+    def partial(batch_df: DataFrame, _, prior: DataFrame | None) -> DataFrame:
+        if prior is not None:
+            # materialize: the per-step partial derived from prior is
+            # written back (dynamic overwrite) to the path prior
+            # scans; also read once instead of once per funnel step
+            prior = prior.localCheckpoint()
+        partials = []
+        prev_f: DataFrame | None = None
+        for i, step in enumerate(step_list):
+            old_i = (
+                merge(prior.filter(F.col("__step") == i)).select("__u", "__ft")
+                if prior is not None
+                else None
+            )
+            ev = batch_df.filter(F.col(event_type) == step).select(
                 F.col(user).alias("__u"), F.col(ts).alias("__t")
             )
+            if i == 0:
+                cand = ev.groupBy("__u").agg(F.min("__t").alias("__ft"))
+            else:
+                cand = (
+                    ev.join(prev_f.select("__u", F.col("__ft").alias("__prev")), "__u")
+                    .filter(F.col("__t") > F.col("__prev"))
+                    .groupBy("__u")
+                    .agg(F.min("__t").alias("__ft"))
+                )
+            new_f = (
+                cand
+                if old_i is None
+                else cand.unionByName(old_i)
+                .groupBy("__u")
+                .agg(F.min("__ft").alias("__ft"))
+            )
             partials.append(
-                consumed.groupBy("__u")
-                .agg(F.max("__t").alias("__ft"))
-                .select(
-                    F.lit(-1).alias("__step"),
+                cand.select(
+                    F.lit(i).alias("__step"),
                     "__u",
                     "__ft",
                     F.lit(None).cast("long").alias("__n"),
                 )
             )
-            if prior is not None:
-                prior_max = merge(prior.filter(F.col("__step") == -1)).select(
-                    "__u", F.col("__ft").alias("__pmax")
+            prev_f = new_f
+        # in-order contract observability: per-user high-water event
+        # ts (sentinel step -1, max-merge) and a counter of rows that
+        # arrived below the carried mark (sentinel step -2, sum-merge)
+        consumed = batch_df.filter(F.col(event_type).isin(*step_list)).select(
+            F.col(user).alias("__u"), F.col(ts).alias("__t")
+        )
+        partials.append(
+            consumed.groupBy("__u")
+            .agg(F.max("__t").alias("__ft"))
+            .select(
+                F.lit(-1).alias("__step"),
+                "__u",
+                "__ft",
+                F.lit(None).cast("long").alias("__n"),
+            )
+        )
+        if prior is not None:
+            prior_max = merge(prior.filter(F.col("__step") == -1)).select(
+                "__u", F.col("__ft").alias("__pmax")
+            )
+            partials.append(
+                consumed.join(prior_max, "__u")
+                .filter(F.col("__t") < F.col("__pmax"))
+                .groupBy(F.lit(-2).alias("__step"))
+                .agg(F.count(F.lit(1)).cast("long").alias("__n"))
+                .select(
+                    "__step",
+                    F.lit(None).cast("string").alias("__u"),
+                    F.lit(None).cast("timestamp").alias("__ft"),
+                    "__n",
                 )
-                partials.append(
-                    consumed.join(prior_max, "__u")
-                    .filter(F.col("__t") < F.col("__pmax"))
-                    .groupBy(F.lit(-2).alias("__step"))
-                    .agg(F.count(F.lit(1)).cast("long").alias("__n"))
-                    .select(
-                        "__step",
-                        F.lit(None).cast("string").alias("__u"),
-                        F.lit(None).cast("timestamp").alias("__ft"),
-                        "__n",
-                    )
-                )
-            partial = partials[0]
-            for p in partials[1:]:
-                partial = partial.unionByName(p)
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
+            )
+        out = partials[0]
+        for p in partials[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def finalize(state: DataFrame, _) -> DataFrame:
         folded = merge(state)
         frontiers = folded.filter(F.col("__step") >= 0)
-        spine = batch_df.sparkSession.createDataFrame(
+        spine = state.sparkSession.createDataFrame(
             [(i + 1, s) for i, s in enumerate(step_list)],
             "step_index int, step_name string",
         )
@@ -1537,21 +1335,23 @@ def stream_funnel(
                 F.coalesce("n_users", F.lit(0)).cast("long").alias("n_users"),
             )
         )
-        if on_result is not None:
-            report = funnel_report_from_counts(counts)
-            # appended AFTER the shared tail so the conversion self-join
-            # never sees the sentinel; absent entirely on in-order runs
-            late_report = folded.filter(
-                (F.col("__step") == -2) & (F.col("__n") > 0)
-            ).select(
-                F.lit(-1).alias("step_index"),
-                F.lit("__late_rows").alias("step_name"),
-                F.col("__n").cast("long").alias("n_users"),
-                F.lit(None).cast("double").alias("conversion"),
-            )
-            on_result(batch_id, report.unionByName(late_report))
+        report = funnel_report_from_counts(counts)
+        # appended AFTER the shared tail so the conversion self-join
+        # never sees the sentinel; absent entirely on in-order runs
+        late_report = folded.filter(
+            (F.col("__step") == -2) & (F.col("__n") > 0)
+        ).select(
+            F.lit(-1).alias("step_index"),
+            F.lit("__late_rows").alias("step_name"),
+            F.col("__n").cast("long").alias("n_users"),
+            F.lit(None).cast("double").alias("conversion"),
+        )
+        return report.unionByName(late_report)
 
-    return per_batch
+    return incremental(
+        state_path, partial=partial, fold=merge, finalize=finalize,
+        on_result=on_result, compact_every=compact_every, carried=True,
+    )
 
 
 def stream_dau_mau(
@@ -1572,38 +1372,22 @@ def stream_dau_mau(
     (``dau_mau_from_user_days``).
 
     State is O(active users x observed days) rows — the same bound the
-    batch operator's first dedup produces — on the replay-idempotent
-    :class:`.statestore.PartialStateTable` discipline.  Returns the
-    ``foreachBatch`` callable.
+    batch operator's first dedup produces.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators.analytics import dau_mau_from_user_days
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.distinct()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            day = F.floor(F.unix_seconds(F.col(ts)) / 86400).cast("long")
-            st.append(
-                batch_df.select(F.col(user).alias("__u"), day.alias("__d")).distinct(),
-                batch_id,
-            )
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            on_result(
-                batch_id,
-                dau_mau_from_user_days(merge(state), window_days=window_days),
-            )
-
-    return per_batch
+    day = F.floor(F.unix_seconds(F.col(ts)) / 86400).cast("long")
+    return incremental(
+        state_path,
+        partial=lambda df, *_: df.select(F.col(user).alias("__u"), day.alias("__d")).distinct(),
+        fold=DataFrame.distinct,
+        finalize=lambda state, _: dau_mau_from_user_days(
+            state.distinct(), window_days=window_days
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_assoc_rules(
@@ -1638,40 +1422,31 @@ def stream_assoc_rules(
     per-batch snapshot re-runs the basket-keyed pair self-join over the
     merged state (sum(basket_size^2), capped by the item-type
     cardinality squared per basket — the stream itself is never
-    re-shuffled).  Returns the ``foreachBatch`` callable.
+    re-shuffled).  Returns the :func:`.statestore.incremental` callable.
     """
     from ..operators.analytics import assoc_baskets, assoc_rules_from_baskets
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
+    return incremental(
+        state_path,
+        partial=lambda df, *_: assoc_baskets(
+            df, ts=ts, user=user, item=item, window_seconds=window_seconds
+        ),
+        fold=DataFrame.distinct,
+        finalize=lambda state, _: assoc_rules_from_baskets(
+            state.distinct(), min_pair_count=min_pair_count
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
-    def merge(df: DataFrame) -> DataFrame:
-        return df.distinct()
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            st.append(
-                assoc_baskets(
-                    batch_df, ts=ts, user=user, item=item,
-                    window_seconds=window_seconds,
-                ),
-                batch_id,
-            )
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            on_result(
-                batch_id,
-                assoc_rules_from_baskets(
-                    merge(state), min_pair_count=min_pair_count
-                ),
-            )
+def _stack(*frames: DataFrame) -> DataFrame:
+    """Union by column name, each frame's missing columns null: the row
+    kinds of one state table share its schema but fill different
+    columns."""
+    from functools import reduce
 
-    return per_batch
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 def _edge_boundaries(edges: DataFrame, *, keys, last_col: str, out_prev: str) -> DataFrame:
@@ -1742,109 +1517,80 @@ def stream_interarrival(
     replay + restart).  Assumes in-timestamp-order delivery across
     batches (the module-doc watermark posture); within a batch, order
     is (ts, *tiebreak) like the batch query.  Returns the
-    ``foreachBatch`` callable.
+    :func:`.statestore.incremental` callable.
     """
     from pyspark.sql import Window
 
     from ..operators.histogram import histogram_quantiles_keyed
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
     kcols = list(keys)
     wname = float(bin_width)
 
     def _fold(df: DataFrame, *, keep_edges: bool) -> DataFrame:
-        hist = (
-            df.filter(F.col("__kind") == "b")
-            .groupBy(*kcols, "__bin")
-            .agg(F.sum("__cnt").cast("long").alias("__cnt"))
-            .select(*kcols, F.lit("b").alias("__kind"), "__bin", "__cnt",
-                    F.lit(None).cast("long").alias("__seq"),
-                    F.lit(None).cast("long").alias("__first_us"),
-                    F.lit(None).cast("long").alias("__last_us"))
-        )
         edges = df.filter(F.col("__kind") == "e")
-        boundary = (
-            _edge_boundaries(edges, keys=kcols, last_col="__last_us", out_prev="__prev_last")
-            .select(
-                *kcols,
-                F.lit("b").alias("__kind"),
-                F.floor(
-                    ((F.col("__first_us") - F.col("__prev_last")).cast("double") / F.lit(1e6))
-                    / F.lit(wname)
-                ).cast("long").alias("__bin"),
-                F.lit(1).cast("long").alias("__cnt"),
-                F.lit(None).cast("long").alias("__seq"),
-                F.lit(None).cast("long").alias("__first_us"),
-                F.lit(None).cast("long").alias("__last_us"),
-            )
+        boundary = _edge_boundaries(
+            edges, keys=kcols, last_col="__last_us", out_prev="__prev_last"
+        ).select(
+            *kcols,
+            F.floor(
+                ((F.col("__first_us") - F.col("__prev_last")).cast("double") / F.lit(1e6))
+                / F.lit(wname)
+            ).cast("long").alias("__bin"),
+            F.lit(1).cast("long").alias("__cnt"),
         )
         folded = (
-            hist.unionByName(boundary)
-            .groupBy(*kcols, "__kind", "__bin")
+            df.filter(F.col("__kind") == "b")
+            .select(*kcols, "__bin", "__cnt")
+            .unionByName(boundary)
+            .groupBy(*kcols, "__bin")
             .agg(F.sum("__cnt").cast("long").alias("__cnt"))
-            .select(*kcols, "__kind", "__bin", "__cnt",
-                    F.lit(None).cast("long").alias("__seq"),
-                    F.lit(None).cast("long").alias("__first_us"),
-                    F.lit(None).cast("long").alias("__last_us"))
+            .withColumn("__kind", F.lit("b"))
         )
         if not keep_edges:
             return folded
-        return folded.unionByName(_newest_edges(edges, keys=kcols))
+        return _stack(folded, _newest_edges(edges, keys=kcols))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=lambda df: _fold(df, keep_edges=True))
-        if not batch_df.isEmpty():
-            us = F.unix_micros(F.col(ts))
-            rows = batch_df.select(*kcols, us.alias("__us"), *tiebreak)
-            in_w = Window.partitionBy(*kcols).orderBy("__us", *tiebreak)
-            gaps = rows.select(
+    def partial(batch_df: DataFrame, batch_id: int, _) -> DataFrame:
+        us = F.unix_micros(F.col(ts))
+        rows = batch_df.select(*kcols, us.alias("__us"), *tiebreak)
+        in_w = Window.partitionBy(*kcols).orderBy("__us", *tiebreak)
+        gaps = rows.select(
+            *kcols,
+            ((F.col("__us") - F.lag("__us").over(in_w)).cast("double") / F.lit(1e6)).alias(
+                "__gap"
+            ),
+        ).filter(F.col("__gap").isNotNull())
+        hist = (
+            gaps.groupBy(
                 *kcols,
-                ((F.col("__us") - F.lag("__us").over(in_w)).cast("double") / F.lit(1e6)).alias(
-                    "__gap"
-                ),
-            ).filter(F.col("__gap").isNotNull())
-            hist = (
-                gaps.groupBy(
-                    *kcols,
-                    F.floor(F.col("__gap") / F.lit(wname)).cast("long").alias("__bin"),
-                )
-                .agg(F.count(F.lit(1)).cast("long").alias("__cnt"))
-                .select(*kcols, F.lit("b").alias("__kind"), "__bin", "__cnt",
-                        F.lit(None).cast("long").alias("__seq"),
-                        F.lit(None).cast("long").alias("__first_us"),
-                        F.lit(None).cast("long").alias("__last_us"))
+                F.floor(F.col("__gap") / F.lit(wname)).cast("long").alias("__bin"),
             )
-            edges = rows.groupBy(*kcols).agg(
-                F.min("__us").alias("__first_us"), F.max("__us").alias("__last_us")
-            ).select(
-                *kcols,
-                F.lit("e").alias("__kind"),
-                F.lit(None).cast("long").alias("__bin"),
-                F.lit(None).cast("long").alias("__cnt"),
-                F.lit(int(batch_id)).alias("__seq"),
-                "__first_us",
-                "__last_us",
-            )
-            st.append(hist.unionByName(edges), batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
+            .agg(F.count(F.lit(1)).cast("long").alias("__cnt"))
+            .withColumn("__kind", F.lit("b"))
+        )
+        edges = rows.groupBy(*kcols).agg(
+            F.lit("e").alias("__kind"),
+            F.lit(batch_id).cast("long").alias("__seq"),
+            F.min("__us").alias("__first_us"),
+            F.max("__us").alias("__last_us"),
+        )
+        return _stack(hist, edges)
+
+    def finalize(state: DataFrame, _) -> DataFrame:
         sketch = (
             _fold(state, keep_edges=False)
             .select(*kcols, F.col("__bin").alias("bin"), F.col("__cnt").alias("cnt"))
         )
-        if on_result is not None:
-            on_result(
-                batch_id,
-                histogram_quantiles_keyed(
-                    sketch, keys=kcols, qs=list(qs), bin_width=wname
-                ),
-            )
+        return histogram_quantiles_keyed(sketch, keys=kcols, qs=list(qs), bin_width=wname)
 
-    return per_batch
+    return incremental(
+        state_path,
+        partial=partial,
+        fold=lambda df: _fold(df, keep_edges=True),
+        finalize=finalize,
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_cohort_retention(
@@ -1865,40 +1611,22 @@ def stream_cohort_retention(
     unconditionally, re-emitted every micro-batch via the shared batch
     tail (``cohort_retention_from_user_days``).  A late event that
     back-dates a user's first-seen day RE-COHORTS them exactly as the
-    batch operator would.  State is O(active users x observed days) on
-    the :class:`.statestore.PartialStateTable` discipline.  Returns the
-    ``foreachBatch`` callable.
+    batch operator would.  State is O(active users x observed days).
+    Returns the :func:`.statestore.incremental` callable.
     """
     from ..operators.analytics import cohort_retention_from_user_days
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.distinct()
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            day = F.floor(F.unix_seconds(F.col(ts)) / 86400).cast("long")
-            st.append(
-                batch_df.select(F.col(user).alias("__u"), day.alias("__d")).distinct(),
-                batch_id,
-            )
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            on_result(
-                batch_id,
-                cohort_retention_from_user_days(
-                    merge(state), max_offset_days=max_offset_days
-                ),
-            )
-
-    return per_batch
+    day = F.floor(F.unix_seconds(F.col(ts)) / 86400).cast("long")
+    return incremental(
+        state_path,
+        partial=lambda df, *_: df.select(F.col(user).alias("__u"), day.alias("__d")).distinct(),
+        fold=DataFrame.distinct,
+        finalize=lambda state, _: cohort_retention_from_user_days(
+            state.distinct(), max_offset_days=max_offset_days
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_ab_lift(
@@ -1920,47 +1648,32 @@ def stream_ab_lift(
     of the salted user id (never ``rand()``), so it costs no state.
     Every micro-batch re-emits the full report via the shared batch
     tail (``ab_lift_from_user_sets``) — the live form of the
-    experiment dashboard.  State is O(users) rows on the
-    :class:`.statestore.PartialStateTable` discipline.  Returns the
-    ``foreachBatch`` callable.
+    experiment dashboard.  State is O(users) rows.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators.analytics import ab_lift_from_user_sets
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
+    def partial(df: DataFrame, *_) -> DataFrame:
+        seen = df.select(F.col(user).alias("__u"), F.lit("u").alias("__kind")).distinct()
+        conv = (
+            df.filter(F.col(event_type) == conversion_type)
+            .select(F.col(user).alias("__u"), F.lit("c").alias("__kind"))
+            .distinct()
+        )
+        return seen.unionByName(conv)
 
-    def merge(df: DataFrame) -> DataFrame:
-        return df.distinct()
+    def finalize(state: DataFrame, _) -> DataFrame:
+        live = state.distinct()
+        return ab_lift_from_user_sets(
+            live.filter(F.col("__kind") == "u").select("__u"),
+            live.filter(F.col("__kind") == "c").select("__u"),
+            salt=salt,
+        )
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            seen = batch_df.select(
-                F.col(user).alias("__u"), F.lit("u").alias("__kind")
-            ).distinct()
-            conv = (
-                batch_df.filter(F.col(event_type) == conversion_type)
-                .select(F.col(user).alias("__u"), F.lit("c").alias("__kind"))
-                .distinct()
-            )
-            st.append(seen.unionByName(conv), batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        live = merge(state)
-        if on_result is not None:
-            on_result(
-                batch_id,
-                ab_lift_from_user_sets(
-                    live.filter(F.col("__kind") == "u").select("__u"),
-                    live.filter(F.col("__kind") == "c").select("__u"),
-                    salt=salt,
-                ),
-            )
-
-    return per_batch
+    return incremental(
+        state_path, partial=partial, fold=DataFrame.distinct, finalize=finalize,
+        on_result=on_result, compact_every=compact_every,
+    )
 
 
 def stream_event_transitions(
@@ -1990,107 +1703,65 @@ def stream_event_transitions(
     of its batch alone (replay overwrites reproduce themselves).
     Compaction folds resolved boundary pairs into the counts and keeps
     only each user's newest edge.  State is O(types^2 + users) between
-    compactions.  Returns the ``foreachBatch`` callable.
+    compactions.  Returns the :func:`.statestore.incremental` callable.
     """
     from pyspark.sql import Window
 
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
-
     def _fold(df: DataFrame, *, keep_edges: bool) -> DataFrame:
-        counts = (
-            df.filter(F.col("__kind") == "n")
-            .groupBy("from_type", "to_type")
-            .agg(F.sum("__n").cast("long").alias("__n"))
-        )
         edges = df.filter(F.col("__kind") == "e")
-        boundary = (
-            _edge_boundaries(edges, keys=["__u"], last_col="__last_t", out_prev="__prev_last")
-            .groupBy(
-                F.col("__prev_last").alias("from_type"),
-                F.col("__first_t").alias("to_type"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("__n"))
+        boundary = _edge_boundaries(
+            edges, keys=["__u"], last_col="__last_t", out_prev="__prev_last"
+        ).select(
+            F.col("__prev_last").alias("from_type"),
+            F.col("__first_t").alias("to_type"),
+            F.lit(1).cast("long").alias("__n"),
         )
         folded = (
-            counts.unionByName(boundary)
+            df.filter(F.col("__kind") == "n")
+            .select("from_type", "to_type", "__n")
+            .unionByName(boundary)
             .groupBy("from_type", "to_type")
             .agg(F.sum("__n").cast("long").alias("__n"))
-            .select(
-                F.lit("n").alias("__kind"),
-                "from_type",
-                "to_type",
-                "__n",
-                F.lit(None).cast("string").alias("__u"),
-                F.lit(None).cast("long").alias("__seq"),
-                F.lit(None).cast("string").alias("__first_t"),
-                F.lit(None).cast("string").alias("__last_t"),
-            )
+            .withColumn("__kind", F.lit("n"))
         )
         if not keep_edges:
             return folded
-        return folded.unionByName(_newest_edges(edges, keys=["__u"]))
+        return _stack(folded, _newest_edges(edges, keys=["__u"]))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=lambda df: _fold(df, keep_edges=True))
-        if not batch_df.isEmpty():
-            w = Window.partitionBy(user).orderBy(ts, *tiebreak)
-            rows = batch_df.select(
-                F.col(user).alias("__u"),
-                F.col(event_type).alias("__t"),
-                F.lag(event_type).over(w).alias("__from"),
-                F.struct(ts, *tiebreak).alias("__ord"),
+    def partial(batch_df: DataFrame, batch_id: int, _) -> DataFrame:
+        w = Window.partitionBy(user).orderBy(ts, *tiebreak)
+        rows = batch_df.select(
+            F.col(user).alias("__u"),
+            F.col(event_type).alias("__t"),
+            F.lag(event_type).over(w).alias("__from"),
+            F.struct(ts, *tiebreak).alias("__ord"),
+        )
+        counts = (
+            rows.filter(F.col("__from").isNotNull())
+            .groupBy(
+                F.col("__from").alias("from_type"), F.col("__t").alias("to_type")
             )
-            counts = (
-                rows.filter(F.col("__from").isNotNull())
-                .groupBy(
-                    F.col("__from").alias("from_type"), F.col("__t").alias("to_type")
-                )
-                .agg(F.count(F.lit(1)).cast("long").alias("__n"))
-                .select(
-                    F.lit("n").alias("__kind"),
-                    "from_type",
-                    "to_type",
-                    "__n",
-                    F.lit(None).cast("string").alias("__u"),
-                    F.lit(None).cast("long").alias("__seq"),
-                    F.lit(None).cast("string").alias("__first_t"),
-                    F.lit(None).cast("string").alias("__last_t"),
-                )
-            )
-            edges = (
-                rows.groupBy("__u")
-                .agg(
-                    F.min_by("__t", "__ord").alias("__first_t"),
-                    F.max_by("__t", "__ord").alias("__last_t"),
-                )
-                .select(
-                    F.lit("e").alias("__kind"),
-                    F.lit(None).cast("string").alias("from_type"),
-                    F.lit(None).cast("string").alias("to_type"),
-                    F.lit(None).cast("long").alias("__n"),
-                    "__u",
-                    F.lit(int(batch_id)).alias("__seq"),
-                    "__first_t",
-                    "__last_t",
-                )
-            )
-            st.append(counts.unionByName(edges), batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            on_result(
-                batch_id,
-                _fold(state, keep_edges=False).select(
-                    "from_type", "to_type", F.col("__n").alias("n")
-                ),
-            )
+            .agg(F.count(F.lit(1)).cast("long").alias("__n"))
+            .withColumn("__kind", F.lit("n"))
+        )
+        edges = rows.groupBy("__u").agg(
+            F.lit("e").alias("__kind"),
+            F.lit(batch_id).cast("long").alias("__seq"),
+            F.min_by("__t", "__ord").alias("__first_t"),
+            F.max_by("__t", "__ord").alias("__last_t"),
+        )
+        return _stack(counts, edges)
 
-    return per_batch
+    return incremental(
+        state_path,
+        partial=partial,
+        fold=lambda df: _fold(df, keep_edges=True),
+        finalize=lambda state, _: _fold(state, keep_edges=False).select(
+            "from_type", "to_type", F.col("__n").alias("n")
+        ),
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_rfm(
@@ -2127,16 +1798,13 @@ def stream_rfm(
     'Recency' here is the reference point the batch operator uses —
     the population's own purchase epochs scored against each other —
     so the twin needs no wall clock and stays deterministic.  State is
-    O(purchasing users) rows on the replay-idempotent
-    :class:`.statestore.PartialStateTable` discipline.  Returns the
-    ``foreachBatch`` callable.
+    O(purchasing users) rows.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators.analytics import rfm_from_per_user
-    from .statestore import PartialStateTable
 
     if int(score_every) < 1:
         raise ValueError(f"score_every must be >= 1, got {score_every}")
-    st = PartialStateTable(state_path)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("__u").agg(
@@ -2145,35 +1813,32 @@ def stream_rfm(
             F.sum("__md").cast("decimal(38,8)").alias("__md"),
         )
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if not batch_df.isEmpty():
-            partial = (
-                batch_df.filter(F.col(event_type) == purchase_type)
-                .groupBy(F.col(user).alias("__u"))
-                .agg(
-                    F.max(F.unix_seconds(F.col(ts))).alias("__r_s"),
-                    F.count(F.lit(1)).cast("long").alias("__n"),
-                    F.sum(F.col(value).cast("decimal(28,8)"))
-                    .cast("decimal(38,8)")
-                    .alias("__md"),
-                )
+    def partial(df: DataFrame, *_) -> DataFrame:
+        return (
+            df.filter(F.col(event_type) == purchase_type)
+            .groupBy(F.col(user).alias("__u"))
+            .agg(
+                F.max(F.unix_seconds(F.col(ts))).alias("__r_s"),
+                F.count(F.lit(1)).cast("long").alias("__n"),
+                F.sum(F.col(value).cast("decimal(28,8)"))
+                .cast("decimal(38,8)")
+                .alias("__md"),
             )
-            st.append(partial, batch_id)
-        if on_result is None or (score_every > 1 and batch_id % score_every != 0):
-            return  # non-snapshot batch: append-only, no O(users) re-score
-        state = st.read(spark)
-        if state is None:
-            return
+        )
+
+    return incremental(
+        state_path,
+        partial=partial,
+        fold=merge,
         # cut_frames=False: the per-batch re-score runs over a small
         # materialized state frame; per-batch localCheckpoints leave RDD
         # blocks pinned until a JVM GC and measured ~1.7x the whole
         # re-score over a 20-batch replay (round 14; values identical)
-        on_result(batch_id, rfm_from_per_user(merge(state), cut_frames=False))
-
-    return per_batch
+        finalize=lambda state, _: rfm_from_per_user(merge(state), cut_frames=False),
+        on_result=on_result,
+        compact_every=compact_every,
+        every=int(score_every),
+    )
 
 
 def stream_novelty(
@@ -2209,49 +1874,40 @@ def stream_novelty(
     per-batch report's shuffle/agg work is O(batch grams): the state is
     semi-filtered by the batch's gram set (broadcast-semi — the
     vocabulary side is a scan+filter, never a vocabulary-wide shuffle)
-    before the min-merge and the scoring join.  Returns the
-    ``foreachBatch`` callable.
+    before the min-merge and the scoring join.  An empty batch reports
+    no rows.  Returns the :func:`.statestore.incremental` callable.
     """
     from .. import lineage
-    from ..llm.dedup import shingle_rows
-    from .statestore import PartialStateTable
-
-    st = PartialStateTable(state_path)
+    from ..llm.dedup import score_novelty, shingle_rows
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("s").agg(F.min("__first").cast("long").alias("__first"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if batch_df.isEmpty():
-            return
-        # the batch's (doc, gram) pairs feed BOTH the state partial and
-        # the report join — materialize once (tokenization is the
-        # expensive leg)
-        sh = lineage.cut(shingle_rows(batch_df, text=text, id_col=id_col, n=shingle_n))
-        st.append(
-            sh.groupBy("s").agg(F.min("id").cast("long").alias("__first")),
-            batch_id,
-        )
-        if on_result is None:
-            return
-        state = st.read(spark)
-        if state is None:
-            return  # e.g. every doc so far shorter than shingle_n tokens
+    def finalize(state: DataFrame, sh: DataFrame) -> DataFrame:
         # bound the report to O(batch grams): only the batch's own grams
         # can appear in its report join, so the vocabulary-sized state is
         # semi-filtered by the batch gram set FIRST (AQE broadcasts the
         # small batch side — the state leg is a scan+filter, not a
         # vocabulary-wide shuffle) and only the survivors are min-merged.
-        batch_grams = sh.select("s").distinct()
-        first = merge(state.join(batch_grams, "s", "left_semi"))
-        from ..llm.dedup import score_novelty
+        first = merge(state.join(sh.select("s").distinct(), "s", "left_semi"))
+        return score_novelty(sh, first, id_col=id_col)
 
-        on_result(batch_id, score_novelty(sh, first, id_col=id_col))
-
-    return per_batch
+    return incremental(
+        state_path,
+        # the batch's (doc, gram) pairs feed BOTH the state partial and
+        # the report join — materialize once (tokenization is the
+        # expensive leg)
+        prepare=lambda df: lineage.cut(
+            shingle_rows(df, text=text, id_col=id_col, n=shingle_n)
+        ),
+        partial=lambda sh, *_: sh.groupBy("s").agg(
+            F.min("id").cast("long").alias("__first")
+        ),
+        fold=merge,
+        finalize=finalize,
+        on_result=on_result,
+        compact_every=compact_every,
+    )
 
 
 def stream_attribution(
@@ -2285,10 +1941,9 @@ def stream_attribution(
       are ADDITIVE — the report is their keyed sum, emitted through the
       batch aggregate's exact expressions (decimal -> double once).
 
-    Replay-idempotent: the prior is read with ``exclude_batch=batch_id``
-    (and a compaction firing on the replayed batch holds that partition
-    out of the fold), so a replay sees exactly the carried state the
-    first attempt saw — WITHOUT the exclusion, state already containing
+    Replay-idempotent: the twin runs ``carried``, so a replay sees
+    exactly the carried state the first attempt saw — WITHOUT the
+    batch's own partition excluded from that prior, state already containing
     the batch's own best-touch write would let a later same-batch touch
     displace an older carried touch in the per-user max, and a
     conversion preceding that touch would re-derive as 'unattributed'
@@ -2303,227 +1958,119 @@ def stream_attribution(
     positive, the report gains a '__late_rows' row (n_conversions =
     cumulative late rows, revenue NULL) — a clean in-order run emits no
     such row, keeping the report exactly batch-equal.
-    State is O(users + touch_types) rows on the
-    :class:`.statestore.PartialStateTable` discipline.  Returns the
-    ``foreachBatch`` callable.
+    State is O(users + touch_types) rows.  Returns the
+    :func:`.statestore.incremental` callable.
     """
     from ..operators import asof
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
+    def _best_touch(per_user) -> DataFrame:
+        # the (ts, event_id)-max touch: the batch as-of's tiebreak
+        return per_user.agg(
+            F.max(F.struct("__tts", "__tid", "touch_type")).alias("__b")
+        ).select("*", "__b.*").drop("__b")
 
     def _fold(df: DataFrame) -> DataFrame:
-        attr = (
-            df.filter(F.col("__kind") == "a")
-            .groupBy("touch_type")
-            .agg(
+        def rows(kind: str, *keys: str) -> DataFrame:
+            return df.filter(F.col("__kind") == kind).groupBy("__kind", *keys)
+
+        return _stack(
+            rows("a", "touch_type").agg(
                 F.sum("__n").cast("long").alias("__n"),
                 F.sum("__rev").cast("decimal(38,8)").alias("__rev"),
-            )
-            .select(
-                F.lit("a").alias("__kind"),
-                "touch_type",
-                "__n",
-                "__rev",
-                F.lit(None).cast("string").alias("__u"),
-                F.lit(None).cast("timestamp").alias("__tts"),
-                F.lit(None).cast("long").alias("__tid"),
-            )
+            ),
+            _best_touch(rows("t", "__u")),
+            # 'm': per-user high-water event ts (max-merge) — the in-order
+            # contract's reference point; 'l': additive late-row counter
+            rows("m", "__u").agg(F.max("__tts").alias("__tts")),
+            rows("l").agg(F.sum("__n").cast("long").alias("__n")),
         )
-        best = (
-            df.filter(F.col("__kind") == "t")
-            .groupBy("__u")
-            .agg(
-                F.max(
-                    F.struct(F.col("__tts"), F.col("__tid"), F.col("touch_type"))
-                ).alias("__b")
-            )
-            .select(
-                F.lit("t").alias("__kind"),
-                F.col("__b.touch_type").alias("touch_type"),
-                F.lit(None).cast("long").alias("__n"),
-                F.lit(None).cast("decimal(38,8)").alias("__rev"),
-                "__u",
-                F.col("__b.__tts").alias("__tts"),
-                F.col("__b.__tid").alias("__tid"),
-            )
-        )
-        # 'm': per-user high-water event ts (max-merge) — the in-order
-        # contract's reference point; 'l': additive late-row counter
-        maxts = (
-            df.filter(F.col("__kind") == "m")
-            .groupBy("__u")
-            .agg(F.max("__tts").alias("__tts"))
-            .select(
-                F.lit("m").alias("__kind"),
-                F.lit(None).cast("string").alias("touch_type"),
-                F.lit(None).cast("long").alias("__n"),
-                F.lit(None).cast("decimal(38,8)").alias("__rev"),
-                "__u",
-                "__tts",
-                F.lit(None).cast("long").alias("__tid"),
-            )
-        )
-        late = (
-            df.filter(F.col("__kind") == "l")
-            .groupBy("__kind")
-            .agg(F.sum("__n").cast("long").alias("__n"))
-            .select(
-                "__kind",
-                F.lit(None).cast("string").alias("touch_type"),
-                "__n",
-                F.lit(None).cast("decimal(38,8)").alias("__rev"),
-                F.lit(None).cast("string").alias("__u"),
-                F.lit(None).cast("timestamp").alias("__tts"),
-                F.lit(None).cast("long").alias("__tid"),
-            )
-        )
-        return attr.unionByName(best).unionByName(maxts).unionByName(late)
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # hold this batch's own prior-attempt partition (if a replay)
-            # out of the fold — once in the base, no read-side exclusion
-            # could remove it and the replay would see a different prior
-            st.compact(spark, transform=_fold, exclude_batch=batch_id)
-        prior = st.read(spark, exclude_batch=batch_id)
-        if not batch_df.isEmpty():
-            conv = batch_df.filter(F.col(event_type) == conversion_type).select(
-                F.col(user).alias("__u"), ts, value, event_id
-            )
-            touches = batch_df.filter(F.col(event_type).isin(*touch_types)).select(
-                F.col(user).alias("__u"),
-                F.col(ts).alias("__tts"),
-                F.col(event_type).alias("touch_type"),
-                F.col(event_id).cast("long").alias("__tid"),
-            )
-            consumed = touches.select("__u", F.col("__tts").alias("__t")).unionByName(
-                conv.select("__u", F.col(ts).alias("__t"))
-            )
-            if prior is not None:
-                # materialize: the partials derived from prior are written
-                # back (dynamic overwrite) to the very path prior scans —
-                # break the lineage so the write plan never reads it
-                folded_prior = _fold(prior).localCheckpoint()
-                carried = folded_prior.filter(F.col("__kind") == "t").select(
+    def partial(batch_df: DataFrame, _, prior: DataFrame | None) -> DataFrame:
+        conv = batch_df.filter(F.col(event_type) == conversion_type).select(
+            F.col(user).alias("__u"), ts, value, event_id
+        )
+        touches = batch_df.filter(F.col(event_type).isin(*touch_types)).select(
+            F.col(user).alias("__u"),
+            F.col(ts).alias("__tts"),
+            F.col(event_type).alias("touch_type"),
+            F.col(event_id).cast("long").alias("__tid"),
+        )
+        consumed = touches.select("__u", F.col("__tts").alias("__t")).unionByName(
+            conv.select("__u", F.col(ts).alias("__t"))
+        )
+        candidates, late = touches, []
+        if prior is not None:
+            # materialize: the partials derived from prior are written
+            # back (dynamic overwrite) to the very path prior scans —
+            # break the lineage so the write plan never reads it
+            folded_prior = _fold(prior).localCheckpoint()
+            candidates = touches.unionByName(
+                folded_prior.filter(F.col("__kind") == "t").select(
                     "__u", "__tts", "touch_type", "__tid"
                 )
-                candidates = touches.unionByName(carried)
-                # in-order contract violation detector: rows older than
-                # the user's carried high-water mark may have silently
-                # diverged from the batch operator — count them
-                prior_max = folded_prior.filter(F.col("__kind") == "m").select(
-                    "__u", F.col("__tts").alias("__pmax")
-                )
-                late_partial = (
-                    consumed.join(prior_max, "__u")
-                    .filter(F.col("__t") < F.col("__pmax"))
-                    .groupBy(F.lit("l").alias("__kind"))
-                    .agg(F.count(F.lit(1)).cast("long").alias("__n"))
-                    .select(
-                        "__kind",
-                        F.lit(None).cast("string").alias("touch_type"),
-                        "__n",
-                        F.lit(None).cast("decimal(38,8)").alias("__rev"),
-                        F.lit(None).cast("string").alias("__u"),
-                        F.lit(None).cast("timestamp").alias("__tts"),
-                        F.lit(None).cast("long").alias("__tid"),
-                    )
-                )
-            else:
-                candidates = touches
-                late_partial = None
-            j = asof.asof_join(
-                conv,
-                candidates,
-                left_on=ts,
-                right_on="__tts",
-                by_left="__u",
-                by_right="__u",
-                right_cols=("touch_type",),
-                tiebreak="__tid",
-                direction="backward",
             )
-            attributed = (
-                j.groupBy(
-                    F.coalesce(F.col("touch_type"), F.lit("unattributed")).alias(
-                        "touch_type"
-                    )
-                )
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("__n"),
-                    F.sum(F.col(value).cast("decimal(28,8)"))
-                    .cast("decimal(38,8)")
-                    .alias("__rev"),
-                )
-                .select(
-                    F.lit("a").alias("__kind"),
-                    "touch_type",
-                    "__n",
-                    "__rev",
-                    F.lit(None).cast("string").alias("__u"),
-                    F.lit(None).cast("timestamp").alias("__tts"),
-                    F.lit(None).cast("long").alias("__tid"),
-                )
+            # in-order contract violation detector: rows older than
+            # the user's carried high-water mark may have silently
+            # diverged from the batch operator — count them
+            prior_max = folded_prior.filter(F.col("__kind") == "m").select(
+                "__u", F.col("__tts").alias("__pmax")
             )
-            best_in_batch = (
-                touches.groupBy("__u")
-                .agg(
-                    F.max(
-                        F.struct(F.col("__tts"), F.col("__tid"), F.col("touch_type"))
-                    ).alias("__b")
-                )
-                .select(
-                    F.lit("t").alias("__kind"),
-                    F.col("__b.touch_type").alias("touch_type"),
-                    F.lit(None).cast("long").alias("__n"),
-                    F.lit(None).cast("decimal(38,8)").alias("__rev"),
-                    "__u",
-                    F.col("__b.__tts").alias("__tts"),
-                    F.col("__b.__tid").alias("__tid"),
-                )
-            )
-            maxts_in_batch = (
-                consumed.groupBy("__u")
-                .agg(F.max("__t").alias("__tts"))
-                .select(
-                    F.lit("m").alias("__kind"),
-                    F.lit(None).cast("string").alias("touch_type"),
-                    F.lit(None).cast("long").alias("__n"),
-                    F.lit(None).cast("decimal(38,8)").alias("__rev"),
-                    "__u",
-                    "__tts",
-                    F.lit(None).cast("long").alias("__tid"),
-                )
-            )
-            partial = attributed.unionByName(best_in_batch).unionByName(maxts_in_batch)
-            if late_partial is not None:
-                partial = partial.unionByName(late_partial)
-            st.append(partial, batch_id)
-        state = st.read(spark)
-        if state is None:
-            return
-        if on_result is not None:
-            folded = _fold(state)
-            report = folded.filter(F.col("__kind") == "a").select(
-                "touch_type",
-                F.col("__n").alias("n_conversions"),
-                F.col("__rev").cast("double").alias("revenue"),
-            )
-            # divergence made observable: any rows that violated the
-            # in-order delivery contract surface as a '__late_rows' row
-            # (absent on a clean run, so the report stays batch-equal)
-            late_report = folded.filter(
-                (F.col("__kind") == "l") & (F.col("__n") > 0)
-            ).select(
-                F.lit("__late_rows").alias("touch_type"),
-                F.col("__n").alias("n_conversions"),
-                F.lit(None).cast("double").alias("revenue"),
-            )
-            on_result(batch_id, report.unionByName(late_report))
+            late = [
+                consumed.join(prior_max, "__u")
+                .filter(F.col("__t") < F.col("__pmax"))
+                .groupBy(F.lit("l").alias("__kind"))
+                .agg(F.count(F.lit(1)).cast("long").alias("__n"))
+            ]
+        j = asof.asof_join(
+            conv,
+            candidates,
+            left_on=ts,
+            right_on="__tts",
+            by_left="__u",
+            by_right="__u",
+            right_cols=("touch_type",),
+            tiebreak="__tid",
+            direction="backward",
+        )
+        attributed = j.groupBy(
+            F.lit("a").alias("__kind"),
+            F.coalesce(F.col("touch_type"), F.lit("unattributed")).alias("touch_type"),
+        ).agg(
+            F.count(F.lit(1)).cast("long").alias("__n"),
+            F.sum(F.col(value).cast("decimal(28,8)")).cast("decimal(38,8)").alias("__rev"),
+        )
+        return _stack(
+            attributed,
+            _best_touch(touches.groupBy(F.lit("t").alias("__kind"), "__u")),
+            consumed.groupBy(F.lit("m").alias("__kind"), "__u").agg(
+                F.max("__t").alias("__tts")
+            ),
+            *late,
+        )
 
-    return per_batch
+    def finalize(state: DataFrame, _) -> DataFrame:
+        folded = _fold(state)
+        report = folded.filter(F.col("__kind") == "a").select(
+            "touch_type",
+            F.col("__n").alias("n_conversions"),
+            F.col("__rev").cast("double").alias("revenue"),
+        )
+        # divergence made observable: any rows that violated the
+        # in-order delivery contract surface as a '__late_rows' row
+        # (absent on a clean run, so the report stays batch-equal)
+        late_report = folded.filter(
+            (F.col("__kind") == "l") & (F.col("__n") > 0)
+        ).select(
+            F.lit("__late_rows").alias("touch_type"),
+            F.col("__n").alias("n_conversions"),
+            F.lit(None).cast("double").alias("revenue"),
+        )
+        return report.unionByName(late_report)
+
+    return incremental(
+        state_path, partial=partial, fold=_fold, finalize=finalize,
+        on_result=on_result, compact_every=compact_every, carried=True,
+    )
 
 
 def stream_url_dedup(
@@ -2555,47 +2102,37 @@ def stream_url_dedup(
     Scale: state is O(distinct canonical urls).  The per-batch report
     is O(batch): the state side is semi-filtered by the batch's url set
     before the min-merge and the decision join (AQE broadcasts the
-    small batch side), never a state-wide shuffle.  Returns the
-    ``foreachBatch`` callable.
+    small batch side), never a state-wide shuffle.  An empty batch
+    reports no rows.  Returns the :func:`.statestore.incremental`
+    callable.
     """
     from .. import lineage
     from ..llm.urls import canonicalize_url, synthesize_raw_url
-    from .statestore import PartialStateTable
 
-    st = PartialStateTable(state_path)
+    d = F.col(id_col)
 
     def merge(df: DataFrame) -> DataFrame:
         return df.groupBy("url").agg(F.min("__min").cast("long").alias("__min"))
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            st.compact(spark, transform=merge)
-        if batch_df.isEmpty():
-            return
-        d = F.col(id_col)
-        canon = lineage.cut(
-            batch_df.select(
+    def finalize(state: DataFrame, canon: DataFrame) -> DataFrame:
+        owner = merge(state.join(canon.select("url").distinct(), "url", "left_semi"))
+        return canon.join(owner, "url").select(
+            "doc_id", "url", (F.col("doc_id") == F.col("__min")).alias("keep")
+        )
+
+    return incremental(
+        state_path,
+        prepare=lambda df: lineage.cut(
+            df.select(
                 d.alias("doc_id"),
                 canonicalize_url(synthesize_raw_url(d, F.col(source))).alias("url"),
             )
-        )
-        st.append(
-            canon.groupBy("url").agg(F.min("doc_id").cast("long").alias("__min")),
-            batch_id,
-        )
-        if on_result is None:
-            return
-        state = st.read(spark)
-        if state is None:
-            return
-        batch_urls = canon.select("url").distinct()
-        owner = merge(state.join(batch_urls, "url", "left_semi"))
-        on_result(
-            batch_id,
-            canon.join(owner, "url").select(
-                "doc_id", "url", (F.col("doc_id") == F.col("__min")).alias("keep")
-            ),
-        )
-
-    return per_batch
+        ),
+        partial=lambda canon, *_: canon.groupBy("url").agg(
+            F.min("doc_id").cast("long").alias("__min")
+        ),
+        fold=merge,
+        finalize=finalize,
+        on_result=on_result,
+        compact_every=compact_every,
+    )

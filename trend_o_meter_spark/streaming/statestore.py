@@ -48,10 +48,12 @@ partitioned by ``__batch_id``:
   before every read/write), which restores the displaced table — so
   readers never see a half-compacted or missing state.
 
-Call ``compact`` at the TOP of the ``foreachBatch`` body (before the
-current batch's append): on replay the previous attempt's partition is
-folded in with the watermark advanced over it, and the re-append is
-filtered out on read.
+:func:`incremental` is the one ``foreachBatch`` body every live twin in
+:mod:`.pipeline` runs over such a table.  It compacts at the TOP of the
+body, before the current batch's append, so on replay the previous
+attempt's partition is folded in with the watermark advanced over it
+and the re-append is filtered out on read.  A twin supplies only its
+``partial``, its compaction ``fold`` and its ``finalize``.
 
 Filesystem contract: paths must be DRIVER-LOCAL (the swap/recovery use
 pathlib/shutil; Spark I/O alone would also work on HDFS, but the
@@ -313,3 +315,70 @@ class PartialStateTable:
     def file_count(self) -> int:
         """Data files currently on disk (growth-boundedness probe)."""
         return sum(1 for _ in Path(self.path).rglob("*.parquet"))
+
+
+def incremental(
+    state_path: str,
+    *,
+    partial,
+    finalize,
+    on_result,
+    compact_every: int,
+    fold=None,
+    prepare=None,
+    carried: bool = False,
+    every: int = 1,
+):
+    """The ``foreachBatch`` callable of a live twin over mergeable
+    partial state: the batch-plan recompute of trend-o-meter's
+    ``runParse()`` (one per accepted sample, trend-o-meter:418) made
+    incremental.  Each micro-batch, in this order:
+
+    1. every ``compact_every`` batches (never batch 0), fold the table's
+       live partitions into its base with the ``fold`` transform — at
+       the TOP of the body, before this batch's append (module doc);
+    2. a ``carried`` twin, whose partial depends on state carried from
+       earlier batches (funnel frontiers, attribution best-touch), reads
+       that ``prior`` with the batch's own partition excluded, and holds
+       the partition out of the compaction too, so a replay derives its
+       partial from exactly the prior its first attempt saw
+       (:meth:`PartialStateTable.read`); other twins get ``None``;
+    3. ``batch = prepare(batch_df)`` (default: the batch itself) is what
+       both the partial and the report read, derived once; unless the
+       batch is empty, ``partial(batch, batch_id, prior)`` is appended
+       to the batch's own partition;
+    4. on a reporting batch — ``on_result`` set and ``batch_id`` a
+       multiple of ``every`` — read the replay-filtered state and emit
+       ``on_result(batch_id, finalize(state, batch))``.  Nothing is read
+       on other batches, and nothing is emitted until the table exists
+       (a seed or a first non-empty partial creates it).
+
+    ``batch_df`` is persisted around its two actions (the empty check
+    and the append) and unpersisted after, Spark's documented pattern
+    for more than one action on one batch: unpersisted, each action
+    re-executes the micro-batch's whole upstream plan — for the day-bin
+    twin, every state partition's ``applyInPandasWithState`` task and
+    state-store commit, twice per batch.
+    """
+    st = PartialStateTable(state_path)
+
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        hold = batch_id if carried else None
+        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+            st.compact(spark, transform=fold, exclude_batch=hold)
+        prior = st.read(spark, exclude_batch=hold) if carried else None
+        batch_df.persist()
+        try:
+            batch = batch_df if prepare is None else prepare(batch_df)
+            if not batch_df.isEmpty():
+                st.append(partial(batch, batch_id, prior), batch_id)
+        finally:
+            batch_df.unpersist()
+        if on_result is None or batch_id % every:
+            return
+        state = st.read(spark)
+        if state is not None:
+            on_result(batch_id, finalize(state, batch))
+
+    return per_batch
