@@ -420,19 +420,48 @@ def test_firehose_bridge_exactly_once_across_reader_restart(spark, mock_redis, t
     assert list(raw.readBetweenOffsets({"seq": 0}, {"seq": 5})) == []
 
 
-def test_firehose_drain_desync_guard_reconnects_after_mid_frame_stall(tmp_path):
+def _bridge_consumer(port, tmp_path):
+    """The durable bridge: one drain = one segment."""
+    from trend_o_meter_spark.transports.firehose_bridge import DurableFirehoseBridge
+
+    br = DurableFirehoseBridge(
+        "127.0.0.1", port, pattern="sensor:*", log_dir=str(tmp_path / "fhlog")
+    )
+    return br._sub, lambda: br.drain_segment(poll_seconds=2.5)
+
+
+def _reader_consumer(port, tmp_path):
+    """The raw `redis_pubsub` reader: one drain = one micro-batch read."""
+    from trend_o_meter_spark.streaming.redis_datasource import _PubSubReader
+
+    rd = _PubSubReader(
+        {"host": "127.0.0.1", "port": str(port), "pattern": "sensor:*", "poll_seconds": "2.5"}
+    )
+    offset = {"seq": 0}
+
+    def drain():
+        rows, end = rd.read(offset)
+        offset.update(end)
+        return len(list(rows))
+
+    return rd._sub, drain
+
+
+@pytest.mark.parametrize("consumer", [_bridge_consumer, _reader_consumer], ids=["bridge", "reader"])
+def test_firehose_drain_desync_guard_reconnects_after_mid_frame_stall(tmp_path, consumer):
     """A push frame that stalls MID-TRANSMISSION used to poison the bridge:
     read_reply had already consumed the `*4` header + early bulk elements
     when the 1 s frame timeout fired, the old `break` kept the connection,
     and the NEXT drain parsed from the middle of the half-sent frame —
     RespError crash or silently dropped frames in the component whose whole
-    purpose is durability.  Now `_drain` compares the connection's framing
-    counter around the failed read: bytes consumed => the stream can only
-    resync by reconnecting, so it drops the connection and the next drain
-    PSUBSCRIBEs afresh on a frame-aligned socket.  Also pinned: the 1 s
-    per-frame drain bound no longer clobbers the constructor's 10 s
-    timeout after the drain returns."""
-    from trend_o_meter_spark.transports.firehose_bridge import DurableFirehoseBridge
+    purpose is durability.  Now the shared `Subscriber.drain` compares the
+    connection's framing counter around the failed read: bytes consumed =>
+    the stream can only resync by reconnecting, so it drops the connection
+    and the next drain PSUBSCRIBEs afresh on a frame-aligned socket.  Also
+    pinned: the 1 s per-frame drain bound no longer clobbers the
+    constructor's 10 s timeout after the drain returns.  Both persistent
+    consumers — the durable bridge and the raw DataSource reader — run on
+    the same subscriber, so both obey the same rule."""
 
     pat = b"sensor:*"
     connections: list[int] = []
@@ -471,24 +500,20 @@ def test_firehose_drain_desync_guard_reconnects_after_mid_frame_stall(tmp_path):
     srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _StallHandler)
     srv.daemon_threads = True
     threading.Thread(target=srv.serve_forever, daemon=True).start()
+    sub, drain = consumer(srv.server_address[1], tmp_path)
     try:
-        with DurableFirehoseBridge(
-            "127.0.0.1",
-            srv.server_address[1],
-            pattern="sensor:*",
-            log_dir=str(tmp_path / "fhlog"),
-        ) as br:
-            # drain 1: the whole frame lands; the mid-frame stall is
-            # detected as a desync and the connection is dropped
-            assert br.drain_segment(poll_seconds=2.5) == 1
-            assert br._conn is None
-            # drain 2: fresh subscription, frames parse cleanly from byte 0
-            # (pre-fix this parsed the stale half-frame -> RespError/garbage)
-            assert br.drain_segment(poll_seconds=2.5) == 2
-            assert br._conn is not None
-            # the drain's 1 s frame bound must not leak: constructor timeout
-            assert br._conn.sock.gettimeout() == 10.0
+        # drain 1: the whole frame lands; the mid-frame stall is
+        # detected as a desync and the connection is dropped
+        assert drain() == 1
+        assert sub._conn is None
+        # drain 2: fresh subscription, frames parse cleanly from byte 0
+        # (pre-fix this parsed the stale half-frame -> RespError/garbage)
+        assert drain() == 2
+        assert sub._conn is not None
+        # the drain's 1 s frame bound must not leak: constructor timeout
+        assert sub._conn.sock.gettimeout() == 10.0
         assert connections == [0, 1]  # exactly one reconnect
     finally:
+        sub.close()
         srv.shutdown()
         srv.server_close()

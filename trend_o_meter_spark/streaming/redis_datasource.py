@@ -22,10 +22,13 @@ Implementation notes (simple-reader API, driver-side by design):
   all downstream work (decode, downsample, day-bins) is cluster-side.
   Throughput ceiling is the bus itself, same as the reference's
   single-connection event loop.
-* The subscription socket is created lazily on first ``read`` and held
-  across micro-batches (a fresh PSUBSCRIBE per batch would DROP frames
-  published between batches — Redis pub/sub only delivers to connected
-  subscribers).
+* The subscription is a :class:`..transports.resp.Subscriber` — the
+  same subscribe and drain code as the durable firehose bridge —
+  opened lazily on first ``read`` and held across micro-batches (a
+  fresh PSUBSCRIBE per batch would DROP frames published between
+  batches — Redis pub/sub only delivers to connected subscribers).  A
+  frame that stalls mid-transmission drops the connection and the next
+  batch subscribes afresh, as the bridge does.
 * Offsets count consumed frames.  Within a run, Spark's simple-reader
   wrapper caches prefetched batches for retry; across a RESTART the bus
   cannot replay (Redis drops what nobody consumed — the reference has
@@ -35,18 +38,21 @@ Implementation notes (simple-reader API, driver-side by design):
   which this source deliberately does not impersonate.
 * Optional one-shot BACKFILL: ``backfill_key`` LRANGEs the history list
   (the reference's S1 scan, trend-o-meter:289-290) into the FIRST batch
-  before tailing — the reference's own startup sequence.
+  before tailing — the reference's own startup sequence, decoded by
+  the same :func:`..transports.redis_source.read_list_pairs` as every
+  history reader.
 """
 
 from __future__ import annotations
 
 import json
-import select
-import time
 from typing import TYPE_CHECKING, Iterator, Tuple
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
+
+from ..transports.redis_source import read_list_pairs
+from ..transports.resp import Subscriber
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -78,12 +84,11 @@ class _PubSubReader(SimpleDataSourceStreamReader):
     def __init__(self, options) -> None:
         self.host = options["host"]
         self.port = int(options["port"])
-        self.pattern = options.get("pattern", "*")
         self.poll_seconds = float(options.get("poll_seconds", "0.2"))
         self.max_per_batch = int(options.get("max_per_batch", "10000"))
         self.backfill_key = options.get("backfill_key")
         self.backfill_max = int(options.get("backfill_max", "14400"))
-        self._conn = None
+        self._sub = Subscriber(self.host, self.port, options.get("pattern", "*"))
 
     # -- offsets -----------------------------------------------------------
 
@@ -95,64 +100,19 @@ class _PubSubReader(SimpleDataSourceStreamReader):
 
     # -- wire --------------------------------------------------------------
 
-    def _ensure_conn(self):
-        from ..transports.resp import RespConnection, encode_command
-
-        if self._conn is None:
-            c = RespConnection(self.host, self.port, timeout=10.0)
-            c.sock.sendall(encode_command("PSUBSCRIBE", self.pattern))
-            ack = c.read_reply()
-            if not (isinstance(ack, list) and ack and ack[0] == b"psubscribe"):
-                raise ValueError(f"unexpected subscribe ack {ack!r}")
-            self._conn = c
-        return self._conn
-
-    def _drain(self, budget: int) -> list[tuple[str, str]]:
-        """Collect up to ``budget`` push frames within the poll window.
-
-        ``select`` gates each parse so the window can close without a
-        blocking read mid-frame; once bytes are readable the frame is
-        parsed to completion (1 s mid-frame allowance)."""
-        c = self._ensure_conn()
-        out: list[tuple[str, str]] = []
-        deadline = time.time() + self.poll_seconds
-        while len(out) < budget:
-            wait = deadline - time.time()
-            if wait <= 0:
-                break
-            if not c._buf:  # no buffered bytes: block at most `wait`
-                r, _, _ = select.select([c.sock], [], [], wait)
-                if not r:
-                    break
-            c.sock.settimeout(1.0)
-            try:
-                frame = c.read_reply()
-            except (TimeoutError, OSError):
-                break
-            if isinstance(frame, list) and len(frame) == 4 and frame[0] == b"pmessage":
-                out.append((frame[2].decode(), frame[3].decode(errors="replace")))
-        return out
-
     def _backfill_rows(self) -> list[tuple[str, str]]:
         """One-shot LRANGE backfill, re-shaped as envelope payloads so
         batch 0 flows through the same decode as the tail.  The list
         holds newest-first ``[ts, value]`` pairs (trend-o-meter:289);
         the metric name is the middle segment of ``<sensor>:<metric>:.list``."""
-        from ..transports.resp import RespConnection
-
         key = self.backfill_key
         parts = key.split(":")
         sensor = parts[0] if len(parts) > 2 else "sensor"
         metric = parts[1] if len(parts) > 2 else "value"
-        with RespConnection(self.host, self.port, timeout=10.0) as c:
-            raw = c.command("LRANGE", key, 0, self.backfill_max) or []
-        rows = []
-        for item in raw:
-            ts, val = json.loads(item)
-            rows.append(
-                (key, json.dumps({"ts": ts, "source": sensor, "value": {metric: val}}))
-            )
-        return rows
+        return [
+            (key, json.dumps({"ts": ts, "source": sensor, "value": {metric: val}}))
+            for ts, val in read_list_pairs(self.host, self.port, key, self.backfill_max)
+        ]
 
     # -- reads -------------------------------------------------------------
 
@@ -162,11 +122,16 @@ class _PubSubReader(SimpleDataSourceStreamReader):
         if seq == 0 and self.backfill_key:
             rows.extend(self._backfill_rows())
         # subscribe BEFORE the backfill scan would be even safer against
-        # the publish/scan race; _ensure_conn is idempotent so do it now
+        # the publish/scan race; subscribe() is idempotent so do it now
         # regardless of whether the drain budget is already spent
-        self._ensure_conn()
+        self._sub.subscribe()
         if len(rows) < self.max_per_batch:
-            rows.extend(self._drain(self.max_per_batch - len(rows)))
+            rows.extend(
+                (chan, payload.decode(errors="replace"))
+                for chan, payload in self._sub.drain(
+                    self.max_per_batch - len(rows), self.poll_seconds
+                )
+            )
         out = [(seq + i, chan, payload) for i, (chan, payload) in enumerate(rows)]
         return iter(out), {"seq": seq + len(out)}
 
@@ -176,11 +141,6 @@ class _PubSubReader(SimpleDataSourceStreamReader):
         # honest answer is the empty range (at-most-once across
         # restarts — the reference's own semantics).
         return iter([])
-
-    def __getstate__(self):  # the socket never travels; reads are driver-side
-        state = dict(self.__dict__)
-        state["_conn"] = None
-        return state
 
 
 def pubsub_readings(stream: "DataFrame") -> "DataFrame":

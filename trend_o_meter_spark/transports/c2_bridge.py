@@ -29,10 +29,10 @@ from __future__ import annotations
 
 import json
 import re
-import time
+from contextlib import closing
 
 from ..control.plane import _js_truthy
-from .resp import RespConnection, encode_command
+from .resp import RespConnection, Subscriber
 
 
 def serve_c2(
@@ -53,24 +53,11 @@ def serve_c2(
     resp_key = f"{chan}:resp"
     log_key = f"{chan}:cmdlog"
 
-    sub = RespConnection(host, port, timeout=max(0.1, timeout))
-    pub = RespConnection(host, port, timeout=max(0.1, timeout))
+    sub = Subscriber(host, port, chan, psubscribe=False, timeout=max(0.1, timeout))
     n = 0
-    try:
-        sub.sock.sendall(encode_command("SUBSCRIBE", chan))
-        ack = sub.read_reply()
-        if not (isinstance(ack, list) and ack and ack[0] == b"subscribe"):
-            raise ValueError(f"unexpected subscribe ack {ack!r}")
-        deadline = time.time() + timeout
-        while n < max_commands and time.time() < deadline:
-            sub.sock.settimeout(max(0.05, deadline - time.time()))
-            try:
-                frame = sub.read_reply()
-            except (TimeoutError, OSError):
-                break
-            if not (isinstance(frame, list) and len(frame) == 3 and frame[0] == b"message"):
-                continue
-            message = frame[2].decode(errors="replace")
+    with closing(sub), RespConnection(host, port, timeout=max(0.1, timeout)) as pub:
+        for _chan, raw in sub.drain(max_commands, timeout):
+            message = raw.decode(errors="replace")
             result = plane.execute(message)
             n += 1
             if _js_truthy(result.ret_val):
@@ -81,7 +68,4 @@ def serve_c2(
                 pub.command("HSET", resp_key, field, payload)
                 pub.command("PUBLISH", resp_key, payload)
             pub.command("LPUSH", log_key, result.to_json())
-    finally:
-        sub.close()
-        pub.close()
     return n

@@ -9,7 +9,8 @@ routine, so SCALE.md routes durable feeds through a replayable log.
 This module is that recipe as executable code:
 
 * :class:`DurableFirehoseBridge` — a driver-side drain process that
-  holds ONE long-lived PSUBSCRIBE connection and appends every push
+  holds ONE long-lived PSUBSCRIBE connection (a :class:`.resp.Subscriber`,
+  the same wire code as the raw DataSource) and appends every push
   frame to JSONL SEGMENT files, published atomically (write to a
   dot-prefixed temp name Spark's file listings ignore, fsync, then
   ``os.rename``) so a reader never observes a half-written segment;
@@ -34,11 +35,10 @@ from __future__ import annotations
 
 import json
 import os
-import select
 import time
 from pathlib import Path
 
-from .resp import RespConnection, encode_command
+from .resp import Subscriber
 
 BRIDGE_SCHEMA = "channel string, payload string, recv_ts double"
 _SEG_PREFIX = "seg-"
@@ -63,73 +63,11 @@ class DurableFirehoseBridge:
         poll_seconds: float = 0.5,
         max_messages: int = 10_000,
     ) -> None:
-        self.host, self.port, self.pattern = host, int(port), pattern
         self.log_dir = Path(log_dir)
         self.log_dir.mkdir(parents=True, exist_ok=True)
         self.poll_seconds = float(poll_seconds)
         self.max_messages = int(max_messages)
-        self._conn: RespConnection | None = None
-
-    # -- wire (same select-gated drain discipline as the raw DataSource) --
-
-    def _ensure_conn(self) -> RespConnection:
-        if self._conn is None:
-            c = RespConnection(self.host, self.port, timeout=10.0)
-            c.sock.sendall(encode_command("PSUBSCRIBE", self.pattern))
-            ack = c.read_reply()
-            if not (isinstance(ack, list) and ack and ack[0] == b"psubscribe"):
-                raise ValueError(f"unexpected subscribe ack {ack!r}")
-            self._conn = c
-        return self._conn
-
-    def _drain(self, budget: int, window: float) -> list[tuple[str, str, float]]:
-        c = self._ensure_conn()
-        out: list[tuple[str, str, float]] = []
-        deadline = time.time() + window
-        base_timeout = c.sock.gettimeout()
-        c.sock.settimeout(1.0)  # per-frame stall bound inside read_reply
-        try:
-            while len(out) < budget:
-                wait = deadline - time.time()
-                if wait <= 0:
-                    break
-                if not c._buf:
-                    r, _, _ = select.select([c.sock], [], [], wait)
-                    if not r:
-                        break
-                mark = c._consumed
-                try:
-                    frame = c.read_reply()
-                except (TimeoutError, OSError):
-                    if c._consumed != mark:
-                        # read_reply already split the `*4` header / early
-                        # bulk elements off the stream before stalling: the
-                        # bytes that remain start MID-FRAME, so reusing this
-                        # connection would parse garbage (RespError crash or
-                        # silently dropped frames).  Drop it; the next drain
-                        # resubscribes on a fresh frame-aligned connection.
-                        # (The resubscribe gap is the same publisher-side
-                        # window as bridge downtime, documented above.)
-                        self.close()
-                    break
-                if (
-                    isinstance(frame, list)
-                    and len(frame) == 4
-                    and frame[0] == b"pmessage"
-                ):
-                    out.append(
-                        (
-                            frame[2].decode(),
-                            frame[3].decode(errors="replace"),
-                            time.time(),
-                        )
-                    )
-        finally:
-            if self._conn is not None:
-                # restore the constructor's timeout — the 1 s drain bound
-                # must not leak into _ensure_conn's subscribe handshake
-                self._conn.sock.settimeout(base_timeout)
-        return out
+        self._sub = Subscriber(host, port, pattern)
 
     # -- segments ----------------------------------------------------------
 
@@ -147,10 +85,13 @@ class DurableFirehoseBridge:
     ) -> int:
         """One bounded drain -> at most one atomically-published segment.
         Returns the number of frames published (0 writes no file)."""
-        rows = self._drain(
-            max_messages or self.max_messages,
-            self.poll_seconds if poll_seconds is None else float(poll_seconds),
-        )
+        rows = [
+            (chan, payload.decode(errors="replace"), time.time())
+            for chan, payload in self._sub.drain(
+                max_messages or self.max_messages,
+                self.poll_seconds if poll_seconds is None else float(poll_seconds),
+            )
+        ]
         if not rows:
             return 0
         seg = self.log_dir / f"{_SEG_PREFIX}{self._next_segment_index():012d}.jsonl"
@@ -169,12 +110,7 @@ class DurableFirehoseBridge:
         return len(rows)
 
     def close(self) -> None:
-        if self._conn is not None:
-            try:
-                self._conn.close()
-            except OSError:
-                pass
-            self._conn = None
+        self._sub.close()
 
     def __enter__(self) -> "DurableFirehoseBridge":
         return self

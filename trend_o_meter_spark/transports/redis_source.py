@@ -1,18 +1,23 @@
 """Redis-backed sources: the reference's actual I/O shapes over RESP.
 
-Three readers mirroring the reference:
-
 * :func:`read_history_list` — the bounded backfill scan S1:
   ``LRANGE <sensor>:<metric>:.list 0 <maxListQueryLength>`` of JSON
-  ``[ts, value]`` pairs, newest first (trend-o-meter:289-290);
+  ``[ts, value]`` pairs, newest first (trend-o-meter:289-290).  Its
+  decode, :func:`read_list_pairs`, is the one every history reader uses
+  (the ``redis_pubsub`` DataSource's batch-0 backfill included);
 * :func:`poll_pubsub` — a bounded ``PSUBSCRIBE`` drain of the live
-  sensor channel / firehose (trend-o-meter:446,528): collects push
-  frames until a message budget or deadline, returns them as rows —
-  the micro-batch form of the reference's event loop (feed it to
+  sensor channel / firehose (trend-o-meter:446,528): the one-shot form
+  of :class:`.resp.Subscriber`, returning frames as rows — the
+  micro-batch form of the reference's event loop (feed it to
   ``foreachBatch`` on a timer for the continuous form);
 * :func:`register_redis_history` — wires the list reader into
   ``catalog.register_source`` so ``table(spark, name)`` — and therefore
   every operator in the engine — runs unchanged over a live Redis.
+
+The long-lived consumers of the same subscriber are the ``redis_pubsub``
+DataSource (:mod:`..streaming.redis_datasource`, at-most-once), the
+durable firehose bridge (:mod:`.firehose_bridge`, replayable) and the C2
+channel (:mod:`.c2_bridge`).
 
 Scale notes: the backfill scan is bounded BY THE REFERENCE'S OWN
 CONTRACT (maxListQueryLength=14400, config/default.json:6), so the
@@ -28,11 +33,11 @@ the only source.
 from __future__ import annotations
 
 import json
-import time
+from contextlib import closing
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .resp import RespConnection, encode_command
+from .resp import RespConnection, Subscriber
 
 
 def read_history_list(
@@ -46,8 +51,13 @@ def read_history_list(
     """``LRANGE <sensor>:<metric>:.list 0 <max_len>`` -> [(ts, value)...]
     newest-first, JSON-decoded (trend-o-meter:289-290; the inclusive end
     index — up to max_len+1 rows — is reproduced faithfully)."""
+    return read_list_pairs(host, port, f"{sensor}:{metric}:.list", max_len)
+
+
+def read_list_pairs(host: str, port: int, key: str, max_len: int) -> list[tuple[float, float]]:
+    """``LRANGE key 0 max_len`` of JSON ``[ts, value]`` pairs -> floats."""
     with RespConnection(host, port) as c:
-        raw = c.command("LRANGE", f"{sensor}:{metric}:.list", 0, max_len) or []
+        raw = c.command("LRANGE", key, 0, max_len) or []
     out = []
     for item in raw:
         ts, val = json.loads(item)
@@ -84,29 +94,10 @@ def poll_pubsub(
     timeout: float = 5.0,
 ) -> list[tuple[str, bytes]]:
     """``PSUBSCRIBE <pattern>`` and drain push frames until
-    ``max_messages`` arrive or ``timeout`` elapses -> [(channel, payload)].
-
-    Push frame shape (RESP2): ``["pmessage", pattern, channel, payload]``;
-    the initial ``["psubscribe", pattern, n]`` ack is consumed first."""
-    out: list[tuple[str, bytes]] = []
-    c = RespConnection(host, port, timeout=max(0.1, timeout))
-    try:
-        c.sock.sendall(encode_command("PSUBSCRIBE", pattern))
-        ack = c.read_reply()
-        if not (isinstance(ack, list) and ack and ack[0] == b"psubscribe"):
-            raise ValueError(f"unexpected subscribe ack {ack!r}")
-        deadline = time.time() + timeout
-        while len(out) < max_messages and time.time() < deadline:
-            c.sock.settimeout(max(0.05, deadline - time.time()))
-            try:
-                frame = c.read_reply()
-            except (TimeoutError, OSError):
-                break
-            if isinstance(frame, list) and len(frame) == 4 and frame[0] == b"pmessage":
-                out.append((frame[2].decode(), frame[3]))
-    finally:
-        c.close()
-    return out
+    ``max_messages`` arrive or ``timeout`` elapses -> [(channel, payload)]
+    (push frame ``["pmessage", pattern, channel, payload]``, RESP2)."""
+    with closing(Subscriber(host, port, pattern, timeout=max(0.1, timeout))) as sub:
+        return list(sub.drain(max_messages, timeout))
 
 
 def register_redis_history(

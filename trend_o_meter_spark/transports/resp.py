@@ -12,11 +12,17 @@ Five frame types, all CRLF-terminated:
 Commands encode as arrays of bulk strings.  :class:`RespConnection`
 wraps a TCP socket with a buffered reader; pub/sub *push* frames arrive
 as ordinary arrays, read with the same :meth:`RespConnection.read_reply`.
+:class:`Subscriber` is the one pub/sub consumer: the subscribe
+handshake and the push-frame drain that ``poll_pubsub``, ``serve_c2``,
+the firehose bridge and the ``redis_pubsub`` DataSource all share.
 """
 
 from __future__ import annotations
 
+import select
 import socket
+import time
+from typing import Iterator
 
 CRLF = b"\r\n"
 
@@ -48,7 +54,7 @@ class RespConnection:
         # this against a pre-call snapshot: unchanged => every received byte
         # is still in _buf and the stream is frame-aligned; changed => the
         # frame header / early elements are gone and the connection can only
-        # resync by reconnecting (firehose_bridge._drain's desync guard).
+        # resync by reconnecting (Subscriber.drain's desync guard).
         self._consumed = 0
 
     # -- framing ---------------------------------------------------------
@@ -108,3 +114,82 @@ class RespConnection:
 
     def __exit__(self, *exc):
         self.close()
+
+
+class Subscriber:
+    """One ``PSUBSCRIBE pattern`` (or, with ``psubscribe=False``,
+    ``SUBSCRIBE channel``) held on a lazily opened connection.
+
+    :meth:`drain` yields ``(channel, payload)`` as each push frame
+    arrives.  Between frames it waits with ``select`` (so the window can
+    close without a blocking read); once bytes are readable the frame is
+    parsed to completion under a 1 s stall bound, and the connection's
+    own timeout is restored when the drain ends.  A read that fails
+    after the frame's header was consumed leaves the stream mid-frame:
+    the connection is dropped and the next drain subscribes afresh on a
+    frame-aligned socket (frames published in that gap are lost — the
+    bus has no replay)."""
+
+    def __init__(
+        self, host: str, port: int, target: str, *, psubscribe: bool = True,
+        timeout: float = 10.0,
+    ) -> None:
+        self.host, self.port, self.target = host, int(port), target
+        self.timeout = timeout
+        self._verb = "PSUBSCRIBE" if psubscribe else "SUBSCRIBE"
+        # push frame: [b"pmessage", pattern, channel, payload] for
+        # PSUBSCRIBE, [b"message", channel, payload] for SUBSCRIBE
+        self._kind, self._size = (b"pmessage", 4) if psubscribe else (b"message", 3)
+        self._conn: RespConnection | None = None
+
+    def subscribe(self) -> RespConnection:
+        """Open the connection and check the server's ack (idempotent)."""
+        if self._conn is None:
+            c = RespConnection(self.host, self.port, timeout=self.timeout)
+            try:
+                c.sock.sendall(encode_command(self._verb, self.target))
+                ack = c.read_reply()
+                if not (isinstance(ack, list) and ack and ack[0] == self._verb.lower().encode()):
+                    raise ValueError(f"unexpected subscribe ack {ack!r}")
+            except Exception:
+                c.close()
+                raise
+            self._conn = c
+        return self._conn
+
+    def drain(self, max_messages: int, window: float) -> Iterator[tuple[str, bytes]]:
+        """Yield push frames until ``max_messages`` arrived or ``window``
+        seconds elapsed (counted from the first ``next``)."""
+        c = self.subscribe()
+        deadline = time.time() + window
+        base_timeout = c.sock.gettimeout()
+        c.sock.settimeout(1.0)  # per-frame stall bound inside read_reply
+        n = 0
+        try:
+            while n < max_messages:
+                wait = deadline - time.time()
+                if wait <= 0:
+                    break
+                if not c._buf and not select.select([c.sock], [], [], wait)[0]:
+                    break
+                mark = c._consumed
+                try:
+                    frame = c.read_reply()
+                except (TimeoutError, OSError):
+                    if c._consumed != mark:
+                        self.close()  # mid-frame: only a reconnect resyncs
+                    break
+                if isinstance(frame, list) and len(frame) == self._size and frame[0] == self._kind:
+                    n += 1
+                    yield frame[-2].decode(), frame[-1]
+        finally:
+            if self._conn is c:
+                c.sock.settimeout(base_timeout)
+
+    def close(self) -> None:
+        if self._conn is not None:
+            self._conn.close()
+            self._conn = None
+
+    def __getstate__(self):  # the socket never travels with a pickled owner
+        return {**self.__dict__, "_conn": None}
